@@ -58,6 +58,11 @@ object Sessions {
       // factor, same rule.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         (c.toInt * 8).toString)
+      // Spark leaves this off, and then AQE never coalesces the final
+      // stage of a `.cache()`d plan: a small cached frame keeps all the
+      // 8× cores partitions above, so every stage over it runs that many
+      // tasks and every sink over it writes up to that many files.
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")

@@ -41,20 +41,6 @@ object Medallion {
         .when(upper(col("speaker_name")).contains("GENERAL"), "Solicitor General")
         .otherwise("Attorney").as("speaker_role"))
 
-  /** bronze_document_chunks.sql — renames + span/length projections. */
-  def bronzeDocumentChunks(chunks: DataFrame): DataFrame =
-    chunks.select(
-      col("id").as("chunk_id"),
-      col("case_id"), col("oa_id"), col("section_id"),
-      col("chunk_text"),
-      col("vector").as("chunk_vector"),
-      col("word_count"), col("token_count"),
-      col("start_utterance_index"), col("end_utterance_index"),
-      col("source_key"),
-      (col("end_utterance_index") - col("start_utterance_index") + 1)
-        .as("utterance_span"),
-      length(col("chunk_text")).as("chunk_length"))
-
   /** bronze_transcript_embeddings.sql — renames + text_length +
     * JSONB-array-length speaker count. */
   def bronzeTranscriptEmbeddings(te: DataFrame): DataFrame =

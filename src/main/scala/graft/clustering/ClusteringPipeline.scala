@@ -12,12 +12,22 @@ import graft.etl.Sinks
   * Usage: runMain graft.clustering.ClusteringPipeline <chunkParquet> <outDir>
   */
 object ClusteringPipeline {
+
+  /** The figures one clustering run reports on stdout. */
+  case class Counts(cases: Long, clusters: Long, reps: Long, neighbors: Long)
+
   def main(args: Array[String]): Unit = {
-    val chunkPath = args(0)
     val outDir = args(1)
-
     val spark = graft.Sessions.local("graft-clustering")
+    val c = run(spark, args(0), outDir)
+    println(s"[clustering] cases=${c.cases} clusters=${c.clusters} " +
+      s"reps=${c.reps} neighbors=${c.neighbors} -> $outDir")
+    spark.stop()
+  }
 
+  /** One clustering run over the chunk table at `chunkPath`, exported
+    * to `outDir`; the cached frames are dropped on return. */
+  def run(spark: SparkSession, chunkPath: String, outDir: String): Counts = {
     val chunks = spark.read.parquet(chunkPath)
     val cases = CaseClustering.caseEmbeddings(chunks).cache()
     val n = cases.count()
@@ -43,7 +53,7 @@ object ClusteringPipeline {
     val clustered = clusterer.cluster(projected, "scaled").cache()
     val reps = CaseClustering.representatives(clustered).cache()
     val neighbors = CaseClustering.topNeighbors(clustered, reps)
-    val stats = CaseClustering.clusterStats(clustered)
+    val nClusters = CaseClustering.clusterStats(clustered).count()
 
     Sinks.csvWithMetadata(
       clustered.select(col("case_id"), col("term_year"), col("docket_name"),
@@ -52,7 +62,7 @@ object ClusteringPipeline {
       s"""{"n_cases": $n, "seed": 42,
          |"perplexity_clamped": ${CaseClustering.clampPerplexity(30.0, n)},
          |"min_cluster_size_clamped": ${CaseClustering.clampMinClusterSize(5, n)},
-         |"n_clusters": ${stats.count()}}""".stripMargin)
+         |"n_clusters": $nClusters}""".stripMargin)
     // dashboard-layer exports (SURVEY S8/S9/A8: what the Streamlit app
     // re-aggregated client-side, precomputed here)
     graft.analytics.Dashboard.clusterSizeHistogram(clustered)
@@ -66,8 +76,8 @@ object ClusteringPipeline {
       .csv(s"$outDir/representatives")
     neighbors.coalesce(1).write.mode("overwrite").option("header", "true")
       .csv(s"$outDir/neighbors")
-    println(s"[clustering] cases=$n clusters=${stats.count()} " +
-      s"reps=${reps.count()} neighbors=${neighbors.count()} -> $outDir")
-    spark.stop()
+    val counts = Counts(n, nClusters, reps.count(), neighbors.count())
+    Seq(cases, clustered, reps).foreach(_.unpersist())
+    counts
   }
 }

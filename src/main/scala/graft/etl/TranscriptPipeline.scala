@@ -10,18 +10,31 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.etl.TranscriptPipeline <rawJsonGlob> <outDir> [dim]
   */
 object TranscriptPipeline {
+
+  /** The figures one ingest run reports (stdout line and summary.json). */
+  case class Counts(raw: Long, valid: Long, junk: Long, utterances: Long,
+                    utterancesInserted: Long, chunksInserted: Long)
+
   def main(args: Array[String]): Unit = {
-    val rawPath = args(0)
     val outDir = args(1)
-    val dim = if (args.length > 2) args(2).toInt else 1024
-
     val spark = graft.Sessions.local("graft-transcript-pipeline")
+    val c = run(spark, args(0), outDir, if (args.length > 2) args(2).toInt else 1024)
+    println(s"[pipeline] raw=${c.raw} valid=${c.valid} " +
+      s"junk=${c.junk} utterances=${c.utterances} (+${c.utterancesInserted}) " +
+      s"chunks=+${c.chunksInserted} -> $outDir")
+    spark.stop()
+  }
 
+  /** One ingest of `rawPath` into `outDir` on `spark`. Every frame that
+    * feeds more than one write is cached, so the JSON is parsed and the
+    * chunks embedded once per run; the caches are dropped on return. */
+  def run(spark: SparkSession, rawPath: String, outDir: String, dim: Int): Counts = {
     val t0 = System.nanoTime()
-    val raw = Transcripts.readRaw(spark, rawPath)
-    val valid = Transcripts.valid(raw).cache()
+    val raw = Transcripts.readRaw(spark, rawPath).cache()
+    val valid = Transcripts.valid(raw)
     val junk = Transcripts.junk(raw)
     Sinks.writeJunk(junk, s"$outDir/junk")
+    val (nRaw, nValid, nJunk) = (raw.count(), valid.count(), junk.count())
 
     val utterances = Transcripts.flatten(valid).cache()
     // verification gate (data_verification.py:31-65): rows must exist
@@ -30,7 +43,7 @@ object TranscriptPipeline {
     val nUttInserted = Sinks.idempotentAppend(utterances, s"$outDir/oa_text", Seq("id"))
 
     val chunks = Transcripts.sectionChunks(utterances)
-    val embedded = new HashingEmbedder(dim).embed(chunks, "chunk_text", "vector")
+    val embedded = new HashingEmbedder(dim).embed(chunks, "chunk_text", "vector").cache()
     val nChunkInserted = Sinks.idempotentAppend(
       embedded, s"$outDir/document_chunk_embeddings", Seq("id"))
     // gate 2 (data_verification.py:67-106)
@@ -62,6 +75,7 @@ object TranscriptPipeline {
         substring_index(col("case_id"), "_", 1).as("term"),
         col("case_id"), col("oa_id"), col("source_key"),
         lit(null).cast("string").as("xml_uri"), col("speaker_list"))
+      .cache()
     transcriptEmbeddings.write.mode("overwrite")
       .parquet(s"$outDir/transcript_embeddings")
 
@@ -83,16 +97,14 @@ object TranscriptPipeline {
       .write.mode("overwrite").partitionBy("term")
       .parquet(s"$outDir/gold_oral_arguments_analytics")
     Sinks.runSummary(s"$outDir/ingestion_summary/summary.json", Map(
-      "raw_documents" -> raw.count(),
-      "valid_documents" -> valid.count(),
-      "junk_documents" -> junk.count(),
+      "raw_documents" -> nRaw,
+      "valid_documents" -> nValid,
+      "junk_documents" -> nJunk,
       "utterances" -> nUtt,
       "utterances_inserted" -> nUttInserted,
       "chunks_inserted" -> nChunkInserted,
       "duration_s" -> (System.nanoTime() - t0) / 1e9))
-    println(s"[pipeline] raw=${raw.count()} valid=${valid.count()} " +
-      s"junk=${junk.count()} utterances=$nUtt (+$nUttInserted) " +
-      s"chunks=+$nChunkInserted -> $outDir")
-    spark.stop()
+    Seq(raw, utterances, embedded, transcriptEmbeddings).foreach(_.unpersist())
+    Counts(nRaw, nValid, nJunk, nUtt, nUttInserted, nChunkInserted)
   }
 }

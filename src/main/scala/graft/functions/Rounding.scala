@@ -22,10 +22,4 @@ object Rounding {
     val p = math.pow(10, digits)
     floor(c * lit(p) + lit(0.5)) / lit(p)
   }
-
-  /** DuckDB SQL fragment equivalent to [[exactRound]]. */
-  def exactRoundSql(expr: String, digits: Int): String = {
-    val p = math.pow(10, digits).toLong
-    s"floor(($expr) * $p + 0.5) / $p"
-  }
 }

@@ -19,13 +19,6 @@ object TextAnalysis {
     "es" -> Seq("el", "la", "de", "y", "en"),
     "de" -> Seq("der", "die", "das", "und", "zu"))
 
-  /** Evidence score: number of words present in the marker set.
-    * (Interpreted-HOF formulation kept for API compatibility and as
-    * the executable spec of the native path; hot paths below use
-    * [[graft.functions.WordStats]] instead.) */
-  def markerScore(words: Column, markers: Seq[String]): Column =
-    size(filter(words, w => w.isin(markers: _*)))
-
   /** Language-ID heuristic: argmax of marker scores with a fixed
     * precedence (en > es > de) on ties. All three marker counts come
     * from ONE native WordStats pass (codegen loop, no interpreted
@@ -70,12 +63,6 @@ object TextAnalysis {
       (lit(1.0) - f("short_word_ratio")) * 0.4 +
       least(f("avg_word_len") / 10.0, lit(1.0)) * 0.2
   }
-
-  /** BPE-ish token count (TextFunctions.tokens: word runs + single
-    * symbols) next to the plain whitespace count. */
-  def tokenCounts(text: Column): Seq[(String, Column)] = Seq(
-    "n_tokens" -> TextFunctions.tokenCount(text),
-    "n_words" -> TextFunctions.wordCount(text))
 
   /** Fixed-window document chunking with overlap — the map-side
     * operator that turns a long-document corpus into training-window

@@ -20,6 +20,14 @@ class StreamingSpec extends SparkSpec {
         s"$what bucket ${d.getName} not folded by the in-stream slot")
   }
 
+  test("every per-dir stream memo is a registered query the cold reset lists") {
+    // st1/st2/st3/st10 are batch faces over the table, with no stream run
+    val batchFaces = Set("st1_hourly_window", "st2_user_sessions",
+      "st3_stream_join", "st10_stream_hopping")
+    assert(graft.analytics.StreamQueries.CachedStreamQueries ===
+      SparkEntry.queries.keySet.filter(_.matches("st\\d+_.*")) -- batchFaces)
+  }
+
   test("streaming hourly window equals the batch run of the same transform") {
     // stage the events as a parquet "stream source" with a stable schema
     val dir = java.nio.file.Files.createTempDirectory("stream-src").toString
