@@ -36,10 +36,21 @@ object Medallion {
       col("source_key"),
       when(col("start_time_ms").isNotNull && col("end_time_ms").isNotNull,
         (col("end_time_ms") - col("start_time_ms")) / 1000.0).as("duration_seconds"),
-      when(upper(col("speaker_name")).contains("JUSTICE"), "Justice")
-        .when(upper(col("speaker_name")).contains("CHIEF"), "Chief Justice")
-        .when(upper(col("speaker_name")).contains("GENERAL"), "Solicitor General")
+      when(nameHas("JUSTICE"), "Justice")
+        .when(nameHas("CHIEF"), "Chief Justice")
+        .when(nameHas("GENERAL"), "Solicitor General")
         .otherwise("Attorney").as("speaker_role"))
+
+  /** `UPPER(speaker_name) LIKE '%<word>%'` for an upper-case ASCII word,
+    * as a case-insensitive regex: Spark 4.1's `upper` initializes ICU's
+    * case-map tables on first use (76 of a pipeline pass's 1416 CPU
+    * samples, PERFORMANCE.md), and this is the path's only case
+    * mapping. The two agree on every
+    * name but those spelling the word with a character whose upper case
+    * is several characters (the ligature ﬆ in "JUﬆICE") or whose lower
+    * case is ASCII but upper case is not ('İ'). */
+  private def nameHas(word: String): Column =
+    col("speaker_name").rlike(s"(?iu)$word")
 
   /** bronze_transcript_embeddings.sql — renames + text_length +
     * JSONB-array-length speaker count. */

@@ -6,7 +6,7 @@ import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.{VecWeightedMean, VectorFunctions => VF}
+import graft.functions.{Covariance, VecWeightedMean, VectorFunctions => VF}
 
 /** Case-clustering stage (SURVEY.md §3.3, reference services/clustering):
   * A1 case embeddings → U6 scaling → 2-D projection → clustering →
@@ -15,7 +15,7 @@ import graft.functions.{VecWeightedMean, VectorFunctions => VF}
   * The reference's t-SNE and HDBSCAN have no MLlib equivalent; per
   * SURVEY §7.3(e) the engine defines the contract at the operator
   * interface (same inputs → same column contract and structural
-  * invariants) and ships MLlib PCA/KMeans defaults behind [[Projector]]
+  * invariants) and ships PCA/KMeans defaults behind [[Projector]]
   * and [[Clusterer]], with the reference's parameter-clamp rules
   * reproduced exactly (perplexity clamp, min_cluster_size clamp,
   * seed 42). A driver-local t-SNE/HDBSCAN can plug in without touching
@@ -95,17 +95,22 @@ object CaseClustering {
     def project(df: DataFrame, inCol: String): DataFrame // adds x, y
   }
 
-  /** MLlib PCA(k=2) default projector (SURVEY U7 substitute). */
+  /** PCA(k=2) default projector (SURVEY U7 substitute), MLlib's
+    * `PCA(k=2)` without its full SVD: the covariance in one distributed
+    * pass ([[Covariance]]), its top-2 eigenvectors on the driver
+    * ([[TopEigen]]), then x/y = vᵢ·input on the UNCENTERED input, as
+    * `PCAModel.transform` projects. x/y equal MLlib's up to each axis's
+    * sign, which here is fixed (largest-|component| of vᵢ positive). */
   final class PcaProjector extends Projector {
     override def project(df: DataFrame, inCol: String): DataFrame = {
-      val withVec = df.withColumn("__v", array_to_vector(col(inCol)))
-      val pca = new org.apache.spark.ml.feature.PCA()
-        .setInputCol("__v").setOutputCol("__p").setK(2)
-        .fit(withVec)
-      pca.transform(withVec)
-        .withColumn("x", element_at(vector_to_array(col("__p")), 1))
-        .withColumn("y", element_at(vector_to_array(col("__p")), 2))
-        .drop("__v", "__p")
+      val spark = df.sparkSession
+      import spark.implicits._
+      val moments = df.select(col(inCol).cast("array<double>"))
+        .as[Array[Double]].select(Covariance.toColumn).head()
+      val d = moments._2.length
+      val (_, v) = TopEigen(Covariance.matrix(moments), d, k = 2)
+      df.withColumn("x", VF.dot(col(inCol), typedLit(v(0).toSeq)))
+        .withColumn("y", VF.dot(col(inCol), typedLit(v(1).toSeq)))
     }
   }
 

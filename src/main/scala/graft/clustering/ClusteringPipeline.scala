@@ -1,8 +1,8 @@
 package graft.clustering
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.etl.Sinks
+import graft.etl.{ObservedPin, Sinks}
 
 /** Clustering analysis entry point (reference services/clustering/main.py
   * run_analysis, SURVEY.md §3.3): chunk table → case embeddings →
@@ -53,11 +53,18 @@ object ClusteringPipeline {
     val clustered = clusterer.cluster(projected, "scaled").cache()
     val reps = CaseClustering.representatives(clustered).cache()
     val neighbors = CaseClustering.topNeighbors(clustered, reps)
-    val nClusters = CaseClustering.clusterStats(clustered).count()
 
+    // n_clusters and the reps and neighbors counts ride the exports' own
+    // jobs as observed metrics; a metric timeout falls back to a count
+    def observed(obs: Observation)(fallback: => Long): Long =
+      ObservedPin.await(obs).map(ObservedPin.long(_, "n")).getOrElse(fallback)
+    val (resultsObs, repsObs, neighborsObs) = (Observation(), Observation(), Observation())
+    lazy val nClusters = observed(resultsObs)(CaseClustering.clusterStats(clustered).count())
     Sinks.csvWithMetadata(
-      clustered.select(col("case_id"), col("term_year"), col("docket_name"),
-        col("total_tokens"), col("section_count"), col("x"), col("y"), col("cluster")),
+      clustered.observe(resultsObs,
+          size(collect_set(when(col("cluster") =!= -1, col("cluster")))).cast("long").as("n"))
+        .select(col("case_id"), col("term_year"), col("docket_name"),
+          col("total_tokens"), col("section_count"), col("x"), col("y"), col("cluster")),
       outDir,
       s"""{"n_cases": $n, "seed": 42,
          |"perplexity_clamped": ${CaseClustering.clampPerplexity(30.0, n)},
@@ -71,12 +78,15 @@ object ClusteringPipeline {
     graft.analytics.Dashboard.termComparison(clustered)
       .coalesce(1).write.mode("overwrite").option("header", "true")
       .csv(s"$outDir/term_comparison")
-    reps.select(col("cluster"), col("case_id"), col("dist"))
+    reps.observe(repsObs, count(lit(1)).as("n"))
+      .select(col("cluster"), col("case_id"), col("dist"))
       .coalesce(1).write.mode("overwrite").option("header", "true")
       .csv(s"$outDir/representatives")
-    neighbors.coalesce(1).write.mode("overwrite").option("header", "true")
+    neighbors.observe(neighborsObs, count(lit(1)).as("n"))
+      .coalesce(1).write.mode("overwrite").option("header", "true")
       .csv(s"$outDir/neighbors")
-    val counts = Counts(n, nClusters, reps.count(), neighbors.count())
+    val counts = Counts(n, nClusters, observed(repsObs)(reps.count()),
+      observed(neighborsObs)(neighbors.count()))
     Seq(cases, clustered, reps).foreach(_.unpersist())
     counts
   }

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 
 /** localCheckpoint a frame with driver-needed aggregates riding the
   * pin's OWN job as observed metrics — the r16 CC convergence-metric
@@ -23,22 +23,26 @@ private[graft] object ObservedPin {
   def apply(df: DataFrame, metrics: Seq[Column])
       : (DataFrame, Option[Map[String, Any]]) =
     try {
-      val obs = org.apache.spark.sql.Observation()
+      val obs = Observation()
       val pinned = df.observe(obs, metrics.head, metrics.tail: _*)
         .localCheckpoint()
-      val m =
-        try {
-          import scala.concurrent.{Await, Future, blocking}
-          import scala.concurrent.duration._
-          import scala.concurrent.ExecutionContext.Implicits.global
-          // blocking{} so a timed-out waiter cannot pin a global-pool
-          // thread (the r16 ADVICE fix, shared here)
-          Some(Await.result(Future(blocking(obs.get)), 60.seconds))
-        } catch { case _: java.util.concurrent.TimeoutException => None }
-      (pinned, m)
+      (pinned, await(obs))
     } catch { case _: org.apache.spark.sql.AnalysisException =>
       (df.localCheckpoint(), None)
     }
+
+  /** The metric row of an observation whose action has run, or None
+    * when it is not delivered within a bounded wait — callers fall back
+    * to explicit jobs, so a metric timeout never fails the caller. */
+  def await(obs: Observation): Option[Map[String, Any]] =
+    try {
+      import scala.concurrent.{Await, Future, blocking}
+      import scala.concurrent.duration._
+      import scala.concurrent.ExecutionContext.Implicits.global
+      // blocking{} so a timed-out waiter cannot pin a global-pool
+      // thread (the r16 ADVICE fix, shared here)
+      Some(Await.result(Future(blocking(obs.get)), 60.seconds))
+    } catch { case _: java.util.concurrent.TimeoutException => None }
 
   /** An observed collect_set metric as a Seq of its element values. */
   def values(m: Map[String, Any], key: String): Seq[Any] = m(key) match {

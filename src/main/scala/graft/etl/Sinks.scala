@@ -214,8 +214,10 @@ object Sinks {
   /** K5 — single-file CSV export + driver-side metadata JSON
     * (clustering/helpers.py:261-315). coalesce(1) is deliberate: the
     * export is a small, final, human-facing artifact (the reference
-    * uploads one CSV); never use this for large outputs. */
-  def csvWithMetadata(df: DataFrame, dir: String, metadataJson: String): Unit = {
+    * uploads one CSV); never use this for large outputs. The metadata
+    * is evaluated after the CSV is written, so it may read metrics
+    * observed on that write. */
+  def csvWithMetadata(df: DataFrame, dir: String, metadataJson: => String): Unit = {
     df.coalesce(1).write.mode(SaveMode.Overwrite)
       .option("header", "true").csv(s"$dir/results")
     Files.createDirectories(Paths.get(dir))

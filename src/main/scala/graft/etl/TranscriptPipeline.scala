@@ -1,6 +1,7 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions._
 
 /** End-to-end transcript pipeline (the Spark translation of the
   * reference's Step Functions state machine, SURVEY.md §3.1): one
@@ -32,9 +33,15 @@ object TranscriptPipeline {
     val t0 = System.nanoTime()
     val raw = Transcripts.readRaw(spark, rawPath).cache()
     val valid = Transcripts.valid(raw)
-    val junk = Transcripts.junk(raw)
-    Sinks.writeJunk(junk, s"$outDir/junk")
-    val (nRaw, nValid, nJunk) = (raw.count(), valid.count(), junk.count())
+    // the raw and valid counts ride the junk write's own job, observed
+    // above its filter; a metric timeout falls back to explicit counts
+    val split = Observation()
+    Sinks.writeJunk(Transcripts.junk(raw.observe(split,
+      count(lit(1)).as("raw"), count_if(Transcripts.isValid).as("valid"))), s"$outDir/junk")
+    val (nRaw, nValid) = ObservedPin.await(split)
+      .map(m => (ObservedPin.long(m, "raw"), ObservedPin.long(m, "valid")))
+      .getOrElse((raw.count(), valid.count()))
+    val nJunk = nRaw - nValid
 
     val utterances = Transcripts.flatten(valid).cache()
     // verification gate (data_verification.py:31-65): rows must exist
@@ -57,7 +64,6 @@ object TranscriptPipeline {
     // Legacy transcript-level embedding table (schema.sql:12-26): one row
     // per (case, oa) with the token-weighted mean of its chunk vectors
     // (A1) and the speaker list as a JSON column.
-    import org.apache.spark.sql.functions._
     import graft.functions.VecWeightedMean
     val transcriptEmbeddings = embedded
       .groupBy(col("case_id"), col("oa_id"), col("source_key"))

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.model.Transcript
@@ -45,7 +45,7 @@ object Transcripts {
   }
 
   /** P11 — shape validation: transcript.sections present and non-empty. */
-  private def isValid =
+  def isValid: Column =
     col("_corrupt_record").isNull &&
       col("transcript").isNotNull &&
       col("transcript.sections").isNotNull &&

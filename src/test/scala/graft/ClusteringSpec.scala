@@ -73,6 +73,100 @@ class ClusteringSpec extends SparkSpec {
     assert(neighbors.filter(abs($"similarity") > 1.0 + 1e-9).count() == 0)
   }
 
+  private def xy(projected: org.apache.spark.sql.DataFrame): Map[String, (Double, Double)] =
+    projected.select($"case_id", $"x", $"y").as[(String, Double, Double)]
+      .collect().map { case (id, x, y) => id -> (x, y) }.toMap
+
+  test("PCA projector: x/y equal MLlib PCA(k=2) up to each axis's sign") {
+    import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
+    val scaled = CaseClustering.scale(cases).cache()
+    val got = xy(new PcaProjector().project(scaled, "scaled"))
+    // MLlib's PCA, kept only as this test's oracle
+    val withVec = scaled.withColumn("__v", array_to_vector($"scaled"))
+    val oracle = new org.apache.spark.ml.feature.PCA()
+      .setInputCol("__v").setOutputCol("__p").setK(2).fit(withVec)
+      .transform(withVec).select($"case_id", vector_to_array($"__p"))
+      .as[(String, Seq[Double])].collect()
+      .map { case (id, p) => id -> (p(0), p(1)) }.toMap
+    assert(got.keySet == oracle.keySet && got.size == 50)
+    for (axis <- Seq[((Double, Double)) => Double](_._1, _._2)) {
+      val ids = got.keys.toSeq.sorted
+      val sign = math.signum(ids.map(i => axis(got(i)) * axis(oracle(i))).sum)
+      val err = ids.map(i => math.abs(axis(got(i)) - sign * axis(oracle(i)))).max
+      assert(sign != 0 && err <= 1e-9, s"max |x - MLlib x| = $err")
+    }
+    scaled.unpersist()
+  }
+
+  test("PCA projector: two runs are bit-identical") {
+    val scaled = CaseClustering.scale(cases)
+    val a = xy(new PcaProjector().project(scaled, "scaled"))
+    val b = xy(new PcaProjector().project(scaled, "scaled"))
+    assert(a == b)
+  }
+
+  /** A symmetric d×d matrix (row-major) with the given eigenvalues on the
+    * columns of a seeded random orthogonal basis, returned with it. */
+  private def planted(eigenvalues: Seq[Double], seed: Long)
+      : (Array[Double], Array[Array[Double]]) = {
+    val d = eigenvalues.size
+    val rnd = new scala.util.Random(seed)
+    val basis = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
+    while (basis.size < d) {
+      val v = Array.fill(d)(rnd.nextGaussian())
+      for (_ <- 0 until 2; u <- basis) {
+        val f = u.indices.map(i => u(i) * v(i)).sum
+        for (i <- v.indices) v(i) -= f * u(i)
+      }
+      val norm = math.sqrt(v.map(x => x * x).sum)
+      basis += v.map(_ / norm)
+    }
+    val c = Array.tabulate(d * d) { ij =>
+      val (i, j) = (ij / d, ij % d)
+      eigenvalues.indices.map(k => eigenvalues(k) * basis(k)(i) * basis(k)(j)).sum
+    }
+    (c, basis.toArray)
+  }
+
+  private def dotD(a: Array[Double], b: Array[Double]): Double =
+    a.indices.map(i => a(i) * b(i)).sum
+
+  test("top-2 eigen-solve: sign convention puts each vector's largest |component| positive") {
+    import graft.clustering.TopEigen
+    val d = 6
+    // top eigenvector (−3, 1, 0, 0, 0, 0)/√10: the solver must return (3, −1, …)/√10
+    val top = Array(-3.0, 1.0, 0.0, 0.0, 0.0, 0.0).map(_ / math.sqrt(10))
+    val c = Array.tabulate(d * d) { ij =>
+      val (i, j) = (ij / d, ij % d)
+      4 * top(i) * top(j) + (if (i == j) 1.0 else 0.0)
+    }
+    val (theta, v) = TopEigen(c, d, k = 2)
+    assert(math.abs(theta(0) - 5.0) < 1e-12 && math.abs(theta(1) - 1.0) < 1e-12)
+    assert(v(0).zip(top).forall { case (a, b) => math.abs(a + b) < 1e-12 }, v(0).toSeq)
+    for (u <- v) {
+      val m = u.indices.maxBy(i => math.abs(u(i)))
+      assert(u(m) > 0, u.toSeq)
+    }
+  }
+
+  test("top-2 eigen-solve: λ2 ≈ λ3 still yields orthonormal vectors spanning the top eigenspace") {
+    import graft.clustering.{EigenNotConverged, TopEigen}
+    val lambda = Seq(10.0, 5.0, 5.0 * (1 - 1e-10)) ++ (0 until 61).map(i => math.pow(0.9, i))
+    val (c, basis) = planted(lambda, seed = 3)
+    try {
+      val (theta, v) = TopEigen(c, 64, k = 2)
+      for (i <- 0 until 2; j <- 0 until 2)
+        assert(math.abs(dotD(v(i), v(j)) - (if (i == j) 1.0 else 0.0)) < 1e-12)
+      assert(math.abs(math.abs(dotD(v(0), basis(0))) - 1) < 1e-12)
+      val inTop = math.pow(dotD(v(1), basis(1)), 2) + math.pow(dotD(v(1), basis(2)), 2)
+      assert(math.abs(inTop - 1) < 1e-10, s"v2 leaves span(e2, e3): $inTop")
+      assert(math.abs(theta(0) - 10) < 1e-10 && math.abs(theta(1) - 5) < 1e-8)
+    } catch { case _: EigenNotConverged => () } // the other allowed outcome
+    // a round cap too small to converge fails by name, never with an answer
+    val e = intercept[EigenNotConverged](TopEigen(c, 64, k = 2, maxIter = 1))
+    assert(e.getMessage.contains("did not reach"), e.getMessage)
+  }
+
   test("driver-local guard: oversized input fails fast, pointing at distributed substitutes") {
     import graft.clustering.{HdbscanClusterer, TsneProjector}
     val scaled = CaseClustering.scale(cases) // 50 rows

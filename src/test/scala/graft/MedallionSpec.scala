@@ -37,7 +37,12 @@ class MedallionSpec extends SparkSpec {
       ("Chief Justice Warren E. Burger", "Justice"), // QUIRK: %JUSTICE% wins
       ("Chief Burger", "Chief Justice"),
       ("Solicitor General Smith", "Solicitor General"),
-      ("John Q. Advocate", "Attorney"))
+      ("John Q. Advocate", "Attorney"),
+      ("chief justice roberts", "Justice"),
+      ("Chief burger", "Chief Justice"),
+      ("mr. GENERAL counsel", "Solicitor General"),
+      ("sOlIcItOr gEnErAl jones", "Solicitor General"),
+      ("justıce (dotless i)", "Justice"))
     val in = roles.map(_._1).zipWithIndex.map { case (n, i) =>
       (s"c_utterance_$i", "c", "oa", i, "sid", n, "hello world one two", 4, 4,
         Some(0L), Some(1000L), 0L, 19L, "sk")
@@ -47,6 +52,14 @@ class MedallionSpec extends SparkSpec {
     val got = Medallion.bronzeOaText(in)
       .select("speaker_name", "speaker_role").as[(String, String)].collect().toMap
     roles.foreach { case (n, want) => assert(got(n) == want, n) }
+    // the reference's UPPER(speaker_name) LIKE chain agrees on every name
+    val upperChain =
+      when(upper($"speaker_name").contains("JUSTICE"), "Justice")
+        .when(upper($"speaker_name").contains("CHIEF"), "Chief Justice")
+        .when(upper($"speaker_name").contains("GENERAL"), "Solicitor General")
+        .otherwise("Attorney")
+    assert(Medallion.bronzeOaText(in)
+      .filter(not($"speaker_role" <=> upperChain)).count() == 0)
   }
 
   test("bronze_transcript_embeddings: speaker_count from JSON with COALESCE-0") {

@@ -76,5 +76,12 @@ class PipelineMainsSpec extends SparkSpec with BeforeAndAfterAll {
                   "representatives", "neighbors", "metadata.json"))
       assert(Files.exists(dir.resolve(f)), s"missing $f")
     assert(Files.readString(dir.resolve("metadata.json")).contains(s""""n_clusters": ${c.clusters}"""))
+    // the observed cluster count is the exported labels', noise excluded
+    val labels = spark.read.option("header", "true").csv(dir.resolve("results").toString)
+      .select("cluster").distinct().collect().map(_.getString(0).toInt).toSet
+    assert(c.clusters == (labels - (-1)).size, s"labels: $labels")
+    val exported = Seq("representatives", "neighbors")
+      .map(f => spark.read.option("header", "true").csv(dir.resolve(f).toString).count())
+    assert(exported == Seq(c.reps, c.neighbors))
   }
 }
