@@ -1,6 +1,7 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** In-place small-file compaction for the append-only parquet stores
   * (BM25 `postings/` term buckets, the triangle `edges/` endpoint
@@ -12,8 +13,8 @@ import org.apache.spark.sql.SparkSession
   * 10⁴ footers; this folds a dir back to ONE file without changing a
   * row.
   *
-  * Protocol per directory (the rebuildKnnEdges staged-swap, applied
-  * dir-wise):
+  * Protocol per directory ([[swap]], shared by every store rewrite —
+  * compaction, takedown, edge rebuild, rebucket):
   *
   *  1. read the dir, write it as a single file to a staged
   *     `<name>__compact_tmp` sibling;
@@ -26,7 +27,7 @@ import org.apache.spark.sql.SparkSession
   * (swept, recomputed); a parked dir with NO live dir is a crash
   * between park and publish — the tmp, which was fully written
   * before the park, publishes; a parked dir WITH a live dir is a
-  * crash before the sweep (swept). Like rebuildKnnEdges, the
+  * crash before the sweep (swept). The
   * park→publish window is not atomic for concurrent READERS — run
   * compaction as the store's owner (the maintenance slot between
   * batches), not racing queries.
@@ -59,9 +60,14 @@ object BucketCompaction {
     else fs.listStatus(p).count(s => s.isFile && isData(s.getPath.getName))
   }
 
-  /** Sweep/complete any crashed compaction under `parent` — called on
-    * entry by [[compactDirs]] so a retry always starts from a
-    * consistent store. */
+  /** The store-root staging dir of the batched swaps ([[swapLeaves]]):
+    * readers ignore it (underscore-prefixed, no `=`) and [[heal]]
+    * sweeps an orphan. */
+  private val StageRoot = "__compact_stage"
+
+  /** Sweep/complete any crashed swap under `parent` — called on entry
+    * by every swap caller so a retry always starts from a consistent
+    * store. */
   def heal(spark: SparkSession, parent: String): Unit = {
     val pp = new org.apache.hadoop.fs.Path(parent)
     val fs = fsOf(spark, pp)
@@ -90,21 +96,79 @@ object BucketCompaction {
           t.stripSuffix("__compact_tmp"))) && fs.exists(tp))
         fs.delete(tp, true): Unit
     }
+    // an orphaned staging root holds only copies of live leaves
+    if (names.contains(StageRoot))
+      fs.delete(new org.apache.hadoop.fs.Path(pp, StageRoot), true): Unit
   }
 
-  /** [[heal]] for a FLAT store path (a [[compactFlatStore]] target):
-    * heals the store's PARENT dir, where the staged swap parks its
-    * artifacts. Call at the TOP of every maintained foreachBatch body,
-    * BEFORE any `fs.exists` bootstrap check or store read: a crash
-    * between the swap's park and publish renames leaves the live dir
-    * absent, and a body that bootstraps a fresh empty store there
-    * makes the NEXT slot's heal sweep the parked full store — the
-    * entire prior corpus/token/index/log state silently lost. Healing
-    * first republishes the parked store, so the bootstrap check sees
-    * it. Driver-side listing of one dir — per-batch noise. */
+  /** [[heal]] for a store swapped as a WHOLE dir (a [[swap]] target):
+    * heals the store's PARENT dir, where the swap parks its artifacts.
+    * Call at the TOP of every maintained foreachBatch body, BEFORE any
+    * `fs.exists` bootstrap check or store read: a crash between the
+    * swap's park and publish renames leaves the live dir absent, and a
+    * body that bootstraps a fresh empty store there makes the NEXT
+    * slot's heal sweep the parked full store — the entire prior
+    * corpus/token/index/log state silently lost. Healing first
+    * republishes the parked store, so the bootstrap check sees it.
+    * Driver-side listing of one dir — per-batch noise. */
   def healAround(spark: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     if (p.getParent != null) heal(spark, p.getParent.toString)
+  }
+
+  /** The staged swap — the one place a store dir is replaced: `stage`
+    * writes the replacement into `<dir>__compact_tmp`; in-dir
+    * sidecars/markers the staged copy lacks are copied in (a store's
+    * `_graft_meta` parameter pin can live inside the dir being
+    * swapped; COPY, not move, so every crash window still holds a
+    * pinned store); then park the live dir as `<dir>__compact_old`,
+    * publish, sweep. Every crash window is one [[heal]] owns, so
+    * callers heal the dir's parent on entry. */
+  private[graft] def swap(spark: SparkSession, dir: org.apache.hadoop.fs.Path)
+                         (stage: org.apache.hadoop.fs.Path => Unit): Unit = {
+    val fs = fsOf(spark, dir)
+    val tmp = dir.suffix("__compact_tmp")
+    val old = dir.suffix("__compact_old")
+    if (fs.exists(tmp)) fs.delete(tmp, true): Unit
+    stage(tmp)
+    if (fs.exists(dir)) {
+      fs.listStatus(dir).map(_.getPath).filter { q =>
+        val n = q.getName
+        (n.startsWith("_graft_meta") || n == "_GRAFT_DONE") &&
+          !fs.exists(new org.apache.hadoop.fs.Path(tmp, n))
+      }.foreach { q =>
+        val in = fs.open(q)
+        val bytes = try in.readAllBytes() finally in.close()
+        val out = fs.create(new org.apache.hadoop.fs.Path(tmp, q.getName), true)
+        try out.write(bytes) finally out.close()
+      }
+      require(fs.rename(dir, old), s"BucketCompaction: park $dir -> $old failed")
+    }
+    require(fs.rename(tmp, dir), s"BucketCompaction: publish $tmp -> $dir failed")
+    if (fs.exists(old)) fs.delete(old, true): Unit
+  }
+
+  /** Batched [[swap]] of several partition leaves of the store at
+    * `path`: ONE job writes `rows`, clustered one output task per
+    * leaf, to the staging root; each named leaf (`c=v`, or `a=x/b=y`
+    * for nested partitions) then swaps in its staged copy through
+    * driver-side renames — a leaf with no staged rows is deleted.
+    * Callers heal `path` (and nested leaves' parents) on entry. */
+  private[graft] def swapLeaves(spark: SparkSession, path: String, rows: DataFrame,
+                                partCols: Seq[String], leaves: Seq[String]): Unit = {
+    val root = new org.apache.hadoop.fs.Path(path, StageRoot)
+    val fs = fsOf(spark, root)
+    rows.repartition(partCols.map(col): _*)
+      .write.mode("overwrite").partitionBy(partCols: _*).parquet(root.toString)
+    leaves.foreach { leaf =>
+      val staged = new org.apache.hadoop.fs.Path(root, leaf)
+      val live = new org.apache.hadoop.fs.Path(path, leaf)
+      if (fs.exists(staged))
+        swap(spark, live)(tmp => require(fs.rename(staged, tmp),
+          s"BucketCompaction: stage $staged -> $tmp failed"))
+      else if (fs.exists(live)) fs.delete(live, true): Unit
+    }
+    fs.delete(root, true): Unit
   }
 
   /** Compact the named child dirs of `parent` (each to one file) if
@@ -113,56 +177,18 @@ object BucketCompaction {
   def compactDirs(spark: SparkSession, parent: String, dirs: Seq[String],
                   maxFiles: Int = 1): Seq[String] = {
     heal(spark, parent)
-    val pp = new org.apache.hadoop.fs.Path(parent)
-    val fs = fsOf(spark, pp)
     dirs.filter { d =>
       dataFileCount(spark, s"$parent/$d") > maxFiles
     }.map { d =>
-      val live = new org.apache.hadoop.fs.Path(pp, d)
-      val tmp = new org.apache.hadoop.fs.Path(pp, s"${d}__compact_tmp")
-      val old = new org.apache.hadoop.fs.Path(pp, s"${d}__compact_old")
-      // 1. stage: one task per dir — a bucket is read-task-sized by
-      //    the stores' data-sized bucket contract, so coalesce(1)
-      //    bounds memory at one bucket, never the store
-      spark.read.parquet(live.toString).coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      // carry IN-DIR sidecars/markers into the staged copy (a FLAT
-      // store's `_graft_meta` parameter pin lives inside the dir being
-      // swapped; losing it would turn the next probe's pre-pin
-      // fail-fast against the store's own owner). COPY, not move: the
-      // live dir stays complete until the publish, so every crash
-      // window still holds a pinned store.
-      fs.listStatus(live).map(_.getPath).filter { q =>
-        val n = q.getName
-        n.startsWith("_graft_meta") || n == "_GRAFT_DONE"
-      }.foreach { q =>
-        val in = fs.open(q)
-        val bytes = try in.readAllBytes() finally in.close()
-        val out = fs.create(new org.apache.hadoop.fs.Path(tmp, q.getName), true)
-        try out.write(bytes) finally out.close()
+      // one task per dir — a bucket is read-task-sized by the stores'
+      // data-sized bucket contract, so coalesce(1) bounds memory at
+      // one bucket, never the store
+      swap(spark, new org.apache.hadoop.fs.Path(parent, d)) { tmp =>
+        spark.read.parquet(s"$parent/$d").coalesce(1)
+          .write.mode("overwrite").parquet(tmp.toString)
       }
-      // 2./3./4. park, publish, sweep
-      require(fs.rename(live, old),
-        s"BucketCompaction: park $live -> $old failed")
-      require(fs.rename(tmp, live),
-        s"BucketCompaction: publish $tmp -> $live failed")
-      fs.delete(old, true): Unit
       d
     }
-  }
-
-  /** Fold a FLAT append-only parquet store — a
-    * [[graft.etl.Sinks.idempotentAppend]] target such as the MinHash
-    * signature stores or near-dup pair logs, which land one file-set
-    * per micro-batch forever — to one file, via the same staged swap
-    * applied to the dir itself (parent = its enclosing dir). Returns
-    * true when a rewrite happened. Row-preserving; run as the store's
-    * owner between appends. */
-  def compactFlatStore(spark: SparkSession, path: String,
-                       maxFiles: Int = 1): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    require(p.getParent != null, s"compactFlatStore: no parent for $path")
-    compactDirs(spark, p.getParent.toString, Seq(p.getName), maxFiles).nonEmpty
   }
 
   /** Compact every partition dir (`<partPrefix>=<value>`) of a
@@ -173,16 +199,12 @@ object BucketCompaction {
     * BATCHED (r16, verdict #4): the r15 pricing showed the slot cost
     * is ~0.1-0.2 s FIXED per folded dir — one Spark job each (st20:
     * ~35 dirs ≈ 6 s, 3-5× a normal batch). Here ONE job folds every
-    * needing dir: a partition-pruned read of exactly those dirs,
-    * clustered one output task per partition value, written to a
-    * staged `__batchfold_tmp` store (1 file per dir by construction);
-    * the per-dir park→publish→sweep renames are driver-side metadata
-    * ops. Crash windows are the SAME per-dir windows as before — the
-    * staged dir renames into the `<dir>__compact_tmp` position the
-    * swap protocol (and [[heal]]) already owns, and an orphaned
-    * `__batchfold_tmp` is invisible to readers (underscore-prefixed,
-    * no `=`) and swept on the next call. Falls back to the per-dir
-    * path for non-integer partition values (none in this codebase). */
+    * needing dir ([[swapLeaves]]): a partition-pruned read of exactly
+    * those dirs, clustered one output task per partition value (1
+    * file per dir by construction); the per-dir swaps are driver-side
+    * metadata ops in the windows [[heal]] owns. Falls back to the
+    * per-dir path for non-integer partition values (none in this
+    * codebase). */
   def compactStore(spark: SparkSession, path: String, partPrefix: String,
                    maxFiles: Int = 1): Seq[String] = {
     val pp = new org.apache.hadoop.fs.Path(path)
@@ -197,41 +219,9 @@ object BucketCompaction {
     val vals = scala.util.Try(
       need.map(_.stripPrefix(s"$partPrefix=").toInt)).toOption
     if (vals.isEmpty) return compactDirs(spark, path, need, maxFiles)
-    val tmpRoot = new org.apache.hadoop.fs.Path(pp, "__batchfold_tmp")
-    if (fs.exists(tmpRoot)) fs.delete(tmpRoot, true): Unit
-    import org.apache.spark.sql.functions.col
-    spark.read.parquet(path)
-      .filter(col(partPrefix).isin(vals.get: _*))
-      .repartition(col(partPrefix)) // one output task per value → 1 file/dir
-      .write.mode("overwrite").partitionBy(partPrefix)
-      .parquet(tmpRoot.toString)
-    need.foreach { d =>
-      val staged = new org.apache.hadoop.fs.Path(tmpRoot, d)
-      if (fs.exists(staged)) {
-        val live = new org.apache.hadoop.fs.Path(pp, d)
-        val tmp = new org.apache.hadoop.fs.Path(pp, s"${d}__compact_tmp")
-        val old = new org.apache.hadoop.fs.Path(pp, s"${d}__compact_old")
-        // move the staged fold into the swap protocol's tmp slot, then
-        // the same park→publish→sweep (and crash windows) as compactDirs
-        require(fs.rename(staged, tmp),
-          s"BucketCompaction: stage $staged -> $tmp failed")
-        fs.listStatus(live).map(_.getPath).filter { q =>
-          val n = q.getName
-          n.startsWith("_graft_meta") || n == "_GRAFT_DONE"
-        }.foreach { q =>
-          val in = fs.open(q)
-          val bytes = try in.readAllBytes() finally in.close()
-          val out = fs.create(new org.apache.hadoop.fs.Path(tmp, q.getName), true)
-          try out.write(bytes) finally out.close()
-        }
-        require(fs.rename(live, old),
-          s"BucketCompaction: park $live -> $old failed")
-        require(fs.rename(tmp, live),
-          s"BucketCompaction: publish $tmp -> $live failed")
-        fs.delete(old, true): Unit
-      }
-    }
-    fs.delete(tmpRoot, true): Unit
+    swapLeaves(spark, path,
+      spark.read.parquet(path).filter(col(partPrefix).isin(vals.get: _*)),
+      Seq(partPrefix), need)
     need
   }
 }

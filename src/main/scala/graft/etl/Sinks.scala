@@ -17,80 +17,87 @@ import java.nio.file.{Files, Paths}
   */
 object Sinks {
 
-  /** Store existence via the Hadoop FS API — java.nio only speaks the
-    * local filesystem, and a silently-false exists on `hdfs://`/`s3a://`
-    * would skip the anti-join dedup entirely, making "idempotent"
-    * append duplicate rows on exactly the storage these sinks claim
-    * to serve. "Exists" means HAS DATA: a dir holding only a
-    * `_graft_meta` sidecar (the pin-leads-data bootstrap of the
-    * parameter-pinned stores) has no keys to anti-join, and aiming
-    * `spark.read.parquet` at it would fail schema inference. */
-  private def storeExists(spark: SparkSession, path: String): Boolean =
-    StoreMeta.hasData(spark, path)
-
   /** K3/K4 — insert-if-absent append keyed on `keys`. Returns the number
     * of rows actually appended. */
-  def idempotentAppend(df: DataFrame, path: String, keys: Seq[String]): Long = {
-    val spark = df.sparkSession
-    val novel =
-      if (storeExists(spark, path)) {
-        val existing = spark.read.parquet(path).select(keys.map(col): _*).distinct()
-        df.join(existing, keys, "left_anti")
-      } else df
-    // localCheckpoint, not cache(): the anti-join must be evaluated
-    // exactly once, BEFORE the append touches `path`. A cached plan
-    // re-evaluates from source on block loss/eviction — and by then the
-    // sink already contains the partially-appended batch, so the re-run
-    // would see its own output and drop or duplicate rows. The checkpoint
-    // truncates lineage so the write can only read the materialized rows.
-    // The inserted-row count rides the pin's own job (r17, ObservedPin).
-    val (materialized, m) = ObservedPin(novel, Seq(count(lit(1)).as("__n")))
-    val n = m.map(ObservedPin.long(_, "__n")).getOrElse(materialized.count())
-    if (n > 0) materialized.write.mode(SaveMode.Append).parquet(path)
-    n
-  }
+  def idempotentAppend(df: DataFrame, path: String, keys: Seq[String]): Long =
+    noveltyAppend(df, path, keys, None)
 
   /** [[idempotentAppend]] for a PARTITIONED store: appends land in
     * their partition directories (`partitionBy`), so a bucketed store
     * (e.g. the SemDeDup assignment store, partitioned by cluster
     * bucket) keeps its partition-pruning layout across incremental
-    * upkeep. Same exactly-once discipline as the flat variant.
-    *
-    * The novelty read is PARTITION-PRUNED (r15 verdict's top ask): a
-    * key's partition value is a pure function of the row (the stores'
-    * bucketing contract — same key ⇒ same bucket), so an existing row
-    * with a delta key can only live in a delta-touched partition dir.
-    * The anti-join therefore reads O(delta-touched buckets), not
-    * O(store), however many batches have accumulated. */
+    * upkeep. */
   def idempotentAppendPartitioned(df: DataFrame, path: String,
                                   keys: Seq[String],
-                                  partitionCol: String): Long = {
+                                  partitionCol: String): Long =
+    noveltyAppend(df, path, keys, Some(partitionCol))
+
+  /** The ONE novelty append (the reference's idempotent insert as
+    * anti-join-then-append), under every store family:
+    *
+    *  1. pin the delta, its touched partition values riding the pin's
+    *     own job as an observed metric (r17, ObservedPin);
+    *  2. read the existing keys — PARTITION-PRUNED to those values, and
+    *     only when the store holds data ([[StoreMeta.hasData]]: a dir
+    *     holding only a sidecar has no keys, and parquet schema
+    *     inference would fail on it). A key's partition value is a pure
+    *     function of the row (the stores' bucketing contract — same key
+    *     ⇒ same partition), so an existing row with a delta key can only
+    *     live in a delta-touched dir: the read is O(delta), not O(store);
+    *  3. `left_anti` the delta against them;
+    *  4. pin the result with its row count observed — localCheckpoint,
+    *     not cache(): the anti-join must be evaluated exactly once,
+    *     BEFORE the append touches `path`. A cached plan re-evaluates
+    *     from source on block loss/eviction, by which time the sink
+    *     already holds the partially-appended batch, so the re-run
+    *     would drop or duplicate rows;
+    *  5. append, partitioned by `partCol`, after `cluster` (a caller's
+    *     write-task layout, given the touched-value count).
+    *
+    * A FLAT store (`partCol` None) has no partition to prune by: it
+    * skips step 1 and reads every key. A partitioned store is healed
+    * first — a parked `<col>=v__compact_old` dir would poison partition
+    * discovery (its name parses as a partition value of the wrong
+    * type). Returns the number of rows appended. */
+  private[graft] def noveltyAppend(df: DataFrame, path: String, keys: Seq[String],
+                                   partCol: Option[String],
+                                   cluster: (DataFrame, Int) => DataFrame =
+                                     (d, _) => d): Long = {
     val spark = df.sparkSession
-    // heal leaf-swap crash artifacts FIRST: a parked `<col>=v__compact_old`
-    // dir would poison partition discovery (its name parses as a
-    // partition value of the wrong type) before the pruned read runs
-    BucketCompaction.heal(spark, path)
-    // the touched-partition list rides the delta pin's own job (r17,
-    // ObservedPin — was a separate collect job); ≤ |partition values|,
-    // driver-bounded by the store's bucket count either way
-    val (delta, dm) = ObservedPin(df,
-      Seq(collect_set(col(partitionCol)).as("__touched")))
+    partCol.foreach(_ => BucketCompaction.heal(spark, path))
+    val (delta, dm) = partCol.fold((df, Option.empty[Map[String, Any]]))(pc =>
+      ObservedPin(df, Seq(collect_set(col(pc)).as("__touched"))))
+    // ≤ |partition values|, driver-bounded by the store's layout
+    lazy val touched: Seq[Any] = partCol.fold(Seq.empty[Any])(pc =>
+      dm.map(ObservedPin.values(_, "__touched")).getOrElse(
+        delta.select(col(pc)).distinct().collect().map(_.get(0)).toSeq))
     val novel =
-      if (storeExists(spark, path)) {
-        val touched = dm.map(ObservedPin.values(_, "__touched"))
-          .getOrElse(delta.select(col(partitionCol)).distinct()
-            .collect().map(_.get(0)).toSeq)
-        val existing = spark.read.parquet(path)
-          .filter(col(partitionCol).isin(touched: _*))
-          .select(keys.map(col): _*).distinct()
+      if (StoreMeta.hasData(spark, path)) {
+        val existing = partCol match {
+          case Some(pc) => prunedExistingKeys(spark, path, keys, touched, pc)
+          case None => spark.read.parquet(path).select(keys.map(col): _*).distinct()
+        }
         delta.join(existing, keys, "left_anti")
       } else delta
     val (materialized, nm) = ObservedPin(novel, Seq(count(lit(1)).as("__n")))
     val n = nm.map(ObservedPin.long(_, "__n")).getOrElse(materialized.count())
-    if (n > 0) materialized.write.mode(SaveMode.Append)
-      .partitionBy(partitionCol).parquet(path)
+    if (n > 0) {
+      val w = cluster(materialized, touched.size).write.mode(SaveMode.Append)
+      partCol.fold(w)(w.partitionBy(_)).parquet(path)
+    }
     n
   }
+
+  /** The existing-key frame of [[noveltyAppend]]'s anti-join: a
+    * partition-pruned scan of the delta-touched dirs only (exposed so
+    * PrunedNoveltySpec can assert the scan's file metric on the exact
+    * plan the append runs). */
+  private[graft] def prunedExistingKeys(spark: SparkSession, path: String,
+                                        keys: Seq[String], touched: Seq[Any],
+                                        partCol: String = "__kb"): DataFrame =
+    spark.read.parquet(path)
+      .filter(col(partCol).isin(touched: _*)) // partition-pruned scan
+      .select(keys.map(col): _*).distinct()
 
   /** Default bucket count for the keyed-log layout: coarse enough that
     * fixture-scale stores don't drown in parquet footers, fine enough
@@ -110,55 +117,29 @@ object Sinks {
   private[graft] def keyBucket(keys: Seq[String], kb: Int) =
     pmod(xxhash64(keys.map(col): _*), lit(kb)).cast("int")
 
-  /** The bucketed anti-join-append CORE — [[idempotentAppend]] with the
-    * novelty read made O(delta), not O(store). The store is parquet
-    * partitioned by `__kb = xxhash64(keys) mod kb`; a replayed or
-    * duplicate key carries the same hash, so scanning ONLY the delta's
-    * own bucket dirs for existing keys is sound (the r13
-    * signature-pruned recipe, `Similarity.appendToIndex`). `kb` is the
-    * caller-resolved pin — the pair logs resolve it from their own
-    * `keyed_log` sidecar ([[idempotentAppendBucketed]]), the
-    * signature/token/hood stores from the `kb` key their families pin
-    * alongside their layout parameters. Returns inserted row count. */
-  /** The existing-key frame of [[bucketedNoveltyAppend]]'s anti-join:
-    * a partition-pruned scan of the delta-touched `__kb=` dirs only
-    * (exposed so PrunedNoveltySpec can assert the scan's file metric
-    * on the exact plan the append runs). */
-  private[graft] def prunedExistingKeys(spark: SparkSession, path: String,
-                                        keys: Seq[String],
-                                        touched: Seq[Int]): DataFrame =
-    spark.read.parquet(path)
-      .filter(col("__kb").isin(touched: _*)) // partition-pruned scan
-      .select(keys.map(col): _*).distinct()
+  /** The pinned novelty-bucket modulus of a `__kb=`-bucketed store,
+    * whatever family pinned it (the keyed logs' own `keyed_log`, or the
+    * signature/token/hood families that carry `kb` beside their layout
+    * parameters). `meta` is the store's sidecar; a store without one,
+    * or without `kb` (a flat layout no writer here produces), fails
+    * fast — its appends and takedowns probe by bucket. */
+  private[graft] def pinnedKb(path: String, meta: Option[Map[String, String]]): Int = {
+    val m = meta.getOrElse(sys.error(s"no _graft_meta sidecar at $path — " +
+      "the bucketed (__kb=) layout is required; rebuild the store"))
+    require(m.contains("kb"),
+      s"store at $path pins no 'kb' (flat layout) — rebuild it bucketed " +
+        s"through its write-store face; sidecar: $m")
+    m("kb").toInt
+  }
 
+  /** [[noveltyAppend]] on a store partitioned by `__kb = xxhash64(keys)
+    * mod kb`; a replayed or duplicate key carries the same hash, so the
+    * pruned read is sound. `kb` is the store's pin ([[pinnedKb]]).
+    * Returns inserted row count. */
   private[graft] def bucketedNoveltyAppend(df: DataFrame, path: String,
                                            keys: Seq[String], kb: Int): Long = {
     require(kb > 0, s"bucketedNoveltyAppend: kb must be positive, got $kb")
-    val spark = df.sparkSession
-    // heal before partition discovery can see a crashed leaf swap
-    BucketCompaction.heal(spark, path)
-    // touched-bucket list rides the delta pin (r17, ObservedPin — was
-    // a separate collect job); ≤ kb values, driver-bounded either way
-    val (delta, dm) = ObservedPin(
-      df.withColumn("__kb", keyBucket(keys, kb)),
-      Seq(collect_set(col("__kb")).as("__touched")))
-    val novel =
-      if (storeExists(spark, path)) {
-        val touched = dm.map(ObservedPin.values(_, "__touched")
-            .map(_.asInstanceOf[Int]))
-          .getOrElse(delta.select(col("__kb")).distinct()
-            .collect().map(_.getInt(0)).toSeq)
-        delta.join(prunedExistingKeys(spark, path, keys, touched),
-          keys, "left_anti")
-      } else delta
-    // same exactly-once discipline as the flat face: materialize the
-    // anti-join BEFORE the append touches the files it read; the
-    // inserted-row count rides the pin
-    val (materialized, nm) = ObservedPin(novel, Seq(count(lit(1)).as("__n")))
-    val n = nm.map(ObservedPin.long(_, "__n")).getOrElse(materialized.count())
-    if (n > 0) materialized.write.mode(SaveMode.Append)
-      .partitionBy("__kb").parquet(path)
-    n
+    noveltyAppend(df.withColumn("__kb", keyBucket(keys, kb)), path, keys, Some("__kb"))
   }
 
   /** [[idempotentAppend]] for an unboundedly-growing keyed LOG (the
@@ -236,33 +217,6 @@ object Sinks {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*)
       .parquet(path)
-
-  /** Small-file compaction: rewrite a parquet directory into
-    * ~`targetBytes`-sized files. Streaming sinks and per-batch
-    * idempotent appends accrete files; at 100 TB the file count —
-    * not the byte count — becomes the scan/listing bottleneck
-    * (footer reads, task-per-file scheduling). One coalescing pass,
-    * sized from the ACTUAL on-disk bytes, staged through a temp dir
-    * so a crash mid-compact never leaves the directory truncated.
-    * Returns (filesBefore, filesAfter). */
-  def compact(spark: SparkSession, path: String,
-              targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(p).filter(_.getPath.getName.endsWith(".parquet"))
-    val totalBytes = parts.map(_.getLen).sum
-    val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__compact_tmp")
-    // coalesce, not repartition: compaction only ever reduces the file
-    // count, and coalesce does it without a shuffle — the read tasks
-    // write straight through
-    spark.read.parquet(path).coalesce(nOut)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    fs.delete(p, true)
-    fs.rename(tmp, p)
-    val after = fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
-    (parts.length, after)
-  }
 
   /** Bucketed catalog table — the co-located-join layout a 100 TB
     * warehouse keys its fact tables on: `bucketBy` the join key and

@@ -299,13 +299,6 @@ object Dedup {
       "num_hashes" -> numHashes.toString, "shingle_n" -> shingleN.toString,
       "kb" -> kb.toString))
 
-  /** A signature/token/hood store's pinned novelty-bucket modulus;
-    * None = a pre-r16 FLAT layout, which appends keep serving through
-    * the unpruned anti-join (correct, just O(store) — rebuild to adopt
-    * the pruned path). */
-  private[graft] def pinnedKb(m: Map[String, String]): Option[Int] =
-    m.get("kb").map(_.toInt)
-
   /** The store's pinned (numHashes, shingleN) — fail-fast on a pre-pin
     * or foreign-family store, or on an explicit caller expectation
     * (`expect* > 0`) that disagrees with the pin. */
@@ -346,7 +339,7 @@ object Dedup {
     // the repartition clusters each bucket into one write task, so the
     // store lands as kb files, not tasks×kb
     minHashPerDoc(df, idCol, textCol, numHashes, shingleN)
-      .withColumn("__kb", pmod(xxhash64(col("__id")), lit(kb)).cast("int"))
+      .withColumn("__kb", graft.etl.Sinks.keyBucket(Seq("__id"), kb))
       .repartition(col("__kb"))
       .write.mode("overwrite").partitionBy("__kb").parquet(path)
     pinMinHashStore(df.sparkSession, path, numHashes, shingleN, kb)
@@ -367,20 +360,12 @@ object Dedup {
   /** Append PRE-COMPUTED signature rows (a `minHashPerDoc` frame at
     * the store's pinned parameters) idempotent on the doc id — the
     * entry the streaming faces use so a micro-batch is signed exactly
-    * once. The novelty anti-join is bucket-pruned when the pin carries
-    * `kb` (every store written at r16+ HEAD); a legacy flat store
-    * keeps the unpruned path. */
-  private[graft] def appendSignatureRows(sigs: DataFrame, path: String): Long = {
-    val m = graft.etl.StoreMeta.requireFamily(sigs.sparkSession, path,
-        MinHashFamily)
-      .getOrElse(sys.error(s"no MinHash signature store at $path"))
-    pinnedKb(m) match {
-      case Some(kb) =>
-        graft.etl.Sinks.bucketedNoveltyAppend(sigs, path, Seq("__id"), kb)
-      case None =>
-        graft.etl.Sinks.idempotentAppend(sigs, path, Seq("__id"))
-    }
-  }
+    * once. The novelty anti-join is pruned to the delta's `__kb`
+    * buckets under the store's pinned modulus. */
+  private[graft] def appendSignatureRows(sigs: DataFrame, path: String): Long =
+    graft.etl.Sinks.bucketedNoveltyAppend(sigs, path, Seq("__id"),
+      graft.etl.Sinks.pinnedKb(path, graft.etl.StoreMeta.requireFamily(
+        sigs.sparkSession, path, MinHashFamily)))
 
   /** Near-dup pairs of a DELTA batch against a persisted signature
     * store (plus within-delta pairs). Only the delta is shingled and
@@ -668,7 +653,7 @@ object Dedup {
     // same r16 keyed-log layout as the MinHash store: bucketed by
     // doc-id hash so appends prune their novelty read
     simHashSignatures(df, idCol, textCol)
-      .withColumn("__kb", pmod(xxhash64(col("__id")), lit(kb)).cast("int"))
+      .withColumn("__kb", graft.etl.Sinks.keyBucket(Seq("__id"), kb))
       .repartition(col("__kb"))
       .write.mode("overwrite").partitionBy("__kb").parquet(path)
     graft.etl.StoreMeta.pinFamily(df.sparkSession, path, SimHashFamily, Map(
@@ -679,18 +664,13 @@ object Dedup {
   /** Append a delta's 8-byte signatures to a pinned
     * [[writeSimHashSignatures]] store, idempotent on the doc id; the
     * pin guard refuses a foreign-geometry store first. Bucket-pruned
-    * novelty read when the pin carries `kb` (every r16+ store).
-    * Returns inserted row count. */
+    * novelty read under the pinned `kb`. Returns inserted row count. */
   def appendSimHashSignatures(delta: DataFrame, idCol: String,
                               textCol: String, path: String): Long = {
-    val m = requireSimHashStore(delta.sparkSession, path)
-    val sigs = simHashSignatures(delta, idCol, textCol)
-    pinnedKb(m) match {
-      case Some(kb) =>
-        graft.etl.Sinks.bucketedNoveltyAppend(sigs, path, Seq("__id"), kb)
-      case None =>
-        graft.etl.Sinks.idempotentAppend(sigs, path, Seq("__id"))
-    }
+    val kb = graft.etl.Sinks.pinnedKb(path,
+      Some(requireSimHashStore(delta.sparkSession, path)))
+    graft.etl.Sinks.bucketedNoveltyAppend(
+      simHashSignatures(delta, idCol, textCol), path, Seq("__id"), kb)
   }
 
   /** Fail-fast resolution of a SimHash store's pin against this
@@ -963,35 +943,23 @@ object Dedup {
     * frozen-at-write-time bucket count needs: rewrite the labels under
     * a new `cb = component mod newBuckets` layout, leaving the (node,
     * component) rows BIT-IDENTICAL (asserted in ComponentStoreSpec).
-    * Staged-tmp + park-then-publish (the rebuildKnnEdges discipline):
-    * the new tree builds fully beside the store, the old tree survives
-    * until the new one is in place, and a parked `__rebucket_old` from
-    * a crashed swap is swept on the next attempt. A crash inside the
-    * two-rename window leaves the store absent with the old tree
-    * parked — recovered on entry by restoring the park before
-    * rebuilding. */
+    * The new tree (labels + its own `_graft_meta`) stages beside the
+    * store and swaps in through the shared staged swap
+    * (etl.BucketCompaction.swap): the old tree survives until the new
+    * one is in place, and a crash inside the park/publish window heals
+    * on entry — the complete staged tree publishes. */
   def rebucketComponentStore(spark: org.apache.spark.sql.SparkSession,
                              path: String, newBuckets: Int): Unit = {
     require(newBuckets > 0, s"rebucketComponentStore: newBuckets=$newBuckets")
-    val p = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent, s"${p.getName}__rebucket_tmp")
-    val old = new org.apache.hadoop.fs.Path(p.getParent, s"${p.getName}__rebucket_old")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p) && fs.exists(old))
-      require(fs.rename(old, p),
-        s"rebucketComponentStore: crash recovery restore $old -> $p failed")
+    graft.etl.BucketCompaction.healAround(spark, path)
     val rows = readComponentStore(spark, path)
       .select(col("node"), col("component"))
       .withColumn("cb", componentBucket(col("component"), newBuckets))
       .localCheckpoint() // materialize BEFORE any rename touches the source
-    if (fs.exists(tmp)) fs.delete(tmp, true): Unit
-    rows.write.partitionBy("cb").parquet(tmp.toString)
-    writeComponentStoreMeta(spark, tmp.toString, newBuckets)
-    if (fs.exists(old)) fs.delete(old, true): Unit
-    if (fs.exists(p))
-      require(fs.rename(p, old), s"rebucketComponentStore: park $p failed")
-    require(fs.rename(tmp, p), s"rebucketComponentStore: publish $tmp failed")
-    fs.delete(old, true): Unit
+    graft.etl.BucketCompaction.swap(spark, new org.apache.hadoop.fs.Path(path)) { tmp =>
+      rows.write.partitionBy("cb").parquet(tmp.toString)
+      writeComponentStoreMeta(spark, tmp.toString, newBuckets)
+    }
   }
 
   /** [[mergeComponentLabels]] against the PERSISTED bucket store, the

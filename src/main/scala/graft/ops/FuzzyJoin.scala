@@ -98,7 +98,7 @@ object FuzzyJoin {
     keyedHoods(
       reps.select(col(idCol).as("__rid") +: col(strCol).as("__s") +:
         blockCols.map(col): _*), "__s", maxDist, blockCols)
-      .withColumn("__kb", pmod(xxhash64(col("__rid")), lit(kb)).cast("int"))
+      .withColumn("__kb", graft.etl.Sinks.keyBucket(Seq("__rid"), kb))
       .repartition(col("__kb"))
       .write.mode("overwrite").partitionBy("__kb").parquet(path)
     graft.etl.StoreMeta.pinFamily(reps.sparkSession, path, HoodFamily, Map(
@@ -150,13 +150,9 @@ object FuzzyJoin {
     val hoods = keyedHoods(
       deltaReps.select(col(idCol).as("__rid") +: col(strCol).as("__s") +:
         blockCols.map(col): _*), "__s", md, blockCols)
-    // bucket-pruned novelty read when the pin carries kb (r16+ stores)
-    m.get("kb").map(_.toInt) match {
-      case Some(kb) =>
-        graft.etl.Sinks.bucketedNoveltyAppend(hoods, path, Seq("__rid"), kb)
-      case None =>
-        graft.etl.Sinks.idempotentAppend(hoods, path, Seq("__rid"))
-    }
+    // novelty read pruned to the delta's buckets under the pinned kb
+    graft.etl.Sinks.bucketedNoveltyAppend(hoods, path, Seq("__rid"),
+      graft.etl.Sinks.pinnedKb(path, Some(m)))
   }
 
   /** Incremental fuzzy pairs: `deltaReps` against the persisted hood

@@ -135,16 +135,6 @@ object Retrieval {
   def appendBm25Index(docs: DataFrame, idCol: String, textCol: String,
                       path: String): Long = {
     val spark = docs.sparkSession
-    // "has data", not "dir exists": the _graft_meta sidecar leads the
-    // first postings write, so the bare dir is not yet a readable store
-    def hasData(p: String): Boolean = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.exists(hp) && fs.listStatus(hp).exists { s =>
-        val n = s.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      }
-    }
     val nb = indexBuckets(spark, path)
     // pin the modulus BEFORE the first append (append never deletes
     // the dir, so the sidecar can lead the data; a crash in between
@@ -167,7 +157,9 @@ object Retrieval {
     // appendToIndex signature-pruning recipe).
     val toks = base.filter(size(col("ws")) > 0)
     val novelP =
-      (if (hasData(s"$path/postings")) {
+      // "has data", not "dir exists": the _graft_meta sidecar leads the
+      // first postings write, so the bare dir is not yet a readable store
+      (if (graft.etl.StoreMeta.hasData(spark, s"$path/postings")) {
         val deltaTbs = toks
           .select(explode(col("ws")).as("w"))
           .select(termBucket(col("w"), nb).as("tb")).distinct()

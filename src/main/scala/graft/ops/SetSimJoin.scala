@@ -113,7 +113,7 @@ object SetSimJoin {
     // token rows colocate in one `__kb=` dir, so the append face's
     // existing-id anti-join reads only delta-touched buckets
     tokenRows(df, idCol, textCol, shingleN)
-      .withColumn("__kb", pmod(xxhash64(col("__id")), lit(kb)).cast("int"))
+      .withColumn("__kb", graft.etl.Sinks.keyBucket(Seq("__id"), kb))
       .repartition(col("__kb"))
       .write.mode("overwrite").partitionBy("__kb").parquet(path)
     graft.etl.StoreMeta.pinFamily(df.sparkSession, path, TokenFamily,
@@ -153,19 +153,11 @@ object SetSimJoin {
   /** Append PRE-COMPUTED token rows (a `tokenRows` frame at the
     * store's pinned shingleN) idempotent on the doc id — the streaming
     * face's entry, so a micro-batch shingles exactly once. The novelty
-    * anti-join is bucket-pruned when the pin carries `kb` (every
-    * r16+ store); a legacy flat store keeps the unpruned path. */
-  private[graft] def appendTokenRows(dRows: DataFrame, path: String): Long = {
-    val m = graft.etl.StoreMeta.requireFamily(dRows.sparkSession, path,
-        TokenFamily)
-      .getOrElse(sys.error(s"no token store at $path"))
-    m.get("kb").map(_.toInt) match {
-      case Some(kb) =>
-        graft.etl.Sinks.bucketedNoveltyAppend(dRows, path, Seq("__id"), kb)
-      case None =>
-        graft.etl.Sinks.idempotentAppend(dRows, path, Seq("__id"))
-    }
-  }
+    * anti-join is pruned to the delta's buckets under the pinned `kb`. */
+  private[graft] def appendTokenRows(dRows: DataFrame, path: String): Long =
+    graft.etl.Sinks.bucketedNoveltyAppend(dRows, path, Seq("__id"),
+      graft.etl.Sinks.pinnedKb(path, graft.etl.StoreMeta.requireFamily(
+        dRows.sparkSession, path, TokenFamily)))
 
   /** Exact verification on per-document digest arrays, shared by
     * every face. `restrict = true` semi-joins the token rows to

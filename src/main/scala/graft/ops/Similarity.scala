@@ -221,70 +221,31 @@ object Similarity {
                       vecCol: String = "embedding"): Unit = {
       val spark = delta.sparkSession
       requireFingerprint(spark, path)
-      val signed = delta.select(col(idCol).as("cand_id"),
-          col(vecCol).cast("array<double>").as("__cv"))
-        .withColumn("__sig", signature(col("__cv")))
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // "has data", not "dir exists" (the appendBm25Index guard): a
-      // day-zero append whose delta was empty/fully-non-novel leaves a
-      // dir holding only the _graft_meta sidecar, and a bare-exists
-      // gate would then aim spark.read.parquet at a parquet-less dir.
-      // The signature partition dirs are underscore-prefixed
-      // (`__sig=<v>`), so they count as data explicitly.
-      val existed = fs.exists(p) && fs.listStatus(p).exists { s =>
-        val n = s.getPath.getName
-        n.startsWith("__sig=") || (!n.startsWith("_") && !n.startsWith("."))
-      }
-      // Pin the signed delta with its distinct-signature list riding
-      // the pin's own job (r17, ObservedPin): one delta signature pass
-      // (the unpinned frame was re-signed by both the prune collect
-      // and the anti-join), no separate collect job. The novelty pin's
-      // row count rides ITS job the same way (was an isEmpty action).
-      val (deltaSigs, novelRaw) =
-        if (existed) {
-          val (signedP, sm) = graft.etl.ObservedPin(signed,
-            Seq(collect_set(col("__sig")).as("__sigs")))
-          val sigs = sm.map(graft.etl.ObservedPin.values(_, "__sigs")
-              .map(_.asInstanceOf[Int]))
-            .getOrElse(signedP.select(col("__sig")).distinct()
-              .collect().map(_.getInt(0)).toSeq)
-          (Some(sigs), signedP.join(
-            spark.read.parquet(path)
-              .filter(col("__sig").isin(sigs: _*))
-              .select(col("cand_id")).distinct(),
-            Seq("cand_id"), "left_anti"))
-        } else (None, signed)
-      // pin novelty BEFORE touching the store
-      val (novel, nm) = graft.etl.ObservedPin(novelRaw,
-        Seq(count(lit(1)).as("__n")))
-      val nNovel = nm.map(graft.etl.ObservedPin.long(_, "__n"))
-        .getOrElse(novel.count())
-      if (nNovel > 0) {
-        // same one-task-per-touched-dir clustering as [[writeIndex]],
-        // but sized to the DELTA (r17, ADVICE): a small delta touches
-        // few signature dirs, and its distinct-signature list is
-        // already collected for the novelty prune — 2^nBits-way
-        // exchanges (up to 2^30) for a handful of rows were pure
-        // planning/scheduling overhead. A hash collision at most makes
-        // one task write two dirs serially.
-        val parts = deltaSigs.map(s => math.max(s.size, 1).min(maxIndexWriteTasks))
-          .getOrElse(buildWriteTasks)
-        novel.repartition(parts, col("__sig"))
-          .write.mode("append").partitionBy("__sig").parquet(path)
-      }
-      // pin the fingerprint ONLY when this append CREATED the store
-      // (append never deletes, so meta-after-data has no wipe hazard).
-      // A pre-guard legacy index (data, no sidecar) is NOT auto-pinned:
-      // locking it to whatever instance happens to append first would
-      // make the first post-guard appender authoritative even when its
+      // pin the fingerprint BEFORE the first data write when this
+      // append creates the store (append never deletes the dir, so the
+      // sidecar can lead the data; a crash in between leaves a pinned
+      // empty store). A legacy index (data, no sidecar) is NOT
+      // auto-pinned: locking it to whatever instance happens to append
+      // first would make that appender authoritative even when its
       // (dim, nBits, seed) differ from the layout the store was built
-      // with — legacy stores keep caller-owned parameter discipline
-      // until an explicit rebuild ([[writeIndex]]) pins them. (A crash
-      // between the data write and this pin leaves the same unpinned
-      // state — safe but unguarded, healed by a writeIndex rebuild.)
-      if (!existed && graft.etl.StoreMeta.read(spark, path).isEmpty)
+      // with — it stays caller-disciplined until a [[writeIndex]]
+      // rebuild pins it.
+      if (graft.etl.StoreMeta.read(spark, path).isEmpty &&
+          !graft.etl.StoreMeta.hasData(spark, path))
         graft.etl.StoreMeta.write(spark, path, layoutFingerprint)
+      // the novelty read is pruned to the delta's signature dirs; the
+      // write clusters one task per touched dir like [[writeIndex]],
+      // sized to the DELTA (r17, ADVICE): 2^nBits-way exchanges (up to
+      // 2^30) for a handful of rows were pure planning/scheduling
+      // overhead. A hash collision at most makes one task write two
+      // dirs serially.
+      graft.etl.Sinks.noveltyAppend(
+        delta.select(col(idCol).as("cand_id"),
+            col(vecCol).cast("array<double>").as("__cv"))
+          .withColumn("__sig", signature(col("__cv"))),
+        path, Seq("cand_id"), Some("__sig"),
+        (novel, nSigs) => novel.repartition(
+          math.max(nSigs, 1).min(maxIndexWriteTasks), col("__sig"))): Unit
     }
 
     /** Approximate cosine top-k against a persisted [[writeIndex]]
@@ -740,40 +701,22 @@ object Similarity {
                      nProbe: Int = 2, idCol: String = "vec_id",
                      vecCol: String = "embedding"): Unit = {
     val spark = delta.sparkSession
+    // a crashed edge swap leaves `edges` parked beside the members
+    graft.etl.BucketCompaction.heal(spark, path)
     val cents = collectCents(spark.read.parquet(s"$path/seeds"))
     requireKnnParams(spark, path, k, nProbe, cents.size)
     // assign the WHOLE delta once (a map-only pass against the frozen
     // broadcast quantizer): the assignment is deterministic, so a
     // previously-appended delta row sits in exactly its own assigned
     // list dir — which makes the member novelty read LIST-PRUNED
-    // (r16, the bucketed-novelty recipe on the layout the store
-    // already has): O(delta's lists), never the full member table.
-    // touched-list set and the two emptiness gates ride their pins'
-    // own jobs (r17, ObservedPin — were a collect and two isEmpty
-    // actions per append)
-    val (assigned, am) = graft.etl.ObservedPin(
+    // (Sinks.noveltyAppend on the layout the store already has):
+    // O(delta's lists), never the full member table
+    graft.etl.Sinks.noveltyAppend(
       assignWithLists(
         delta.select(col(idCol).as("cand_id"),
           col(vecCol).cast("array<double>").as("__cv")), cents),
-      Seq(collect_set(col("list_id")).as("__lists")))
-    val deltaLists = am.map(graft.etl.ObservedPin.values(_, "__lists")
-        .map(_.asInstanceOf[Long]))
-      .getOrElse(assigned.select(col("list_id")).distinct()
-        .collect().map(_.getLong(0)).toSeq) // ≤ nLists, driver-bounded
-    // pinned for the same reason as Sinks.idempotentAppend: the
-    // anti-join must materialize BEFORE the append touches the files
-    // it reads, or a re-evaluation would see its own output
-    val (novel, nm) = graft.etl.ObservedPin(
-      assigned.join(readMembers(spark, path)
-          .filter(col("list_id").isin(deltaLists: _*)) // partition-pruned
-          .select(col("cand_id")),
-        Seq("cand_id"), "left_anti"),
-      Seq(count(lit(1)).as("__n")))
-    if (nm.map(graft.etl.ObservedPin.long(_, "__n"))
-        .getOrElse(novel.count()) > 0)
-      novel
-        .repartition(col("list_id"))
-        .write.mode("append").partitionBy("list_id").parquet(s"$path/members")
+      s"$path/members", Seq("cand_id"), Some("list_id"),
+      (novel, _) => novel.repartition(col("list_id"))): Unit
     val (missing, mm) = graft.etl.ObservedPin(
       delta.join(spark.read.parquet(s"$path/edges")
           .select(col("vec_id").as(idCol)).distinct(),
@@ -816,12 +759,13 @@ object Similarity {
     * the STORED members — no re-signing (members arrive pre-assigned;
     * probes re-derive from the frozen quantizer over the stored
     * vectors), so the cost is the probe join + top-k alone — and the
-    * edge dir swaps via staged-tmp + two renames. A crash during the
-    * (long) rebuild write leaves the old edges fully intact; a crash
-    * inside the (instant) two-rename swap window can leave the store
-    * edge-less, and the NEXT rebuild heals it — it never reads the
-    * edge dir, and a parked `edges__rebuild_old` from a crashed swap
-    * is swept before publishing. Member and seed files are untouched
+    * edge dir swaps through the shared staged swap
+    * (etl.BucketCompaction.swap). A crash during the (long) rebuild
+    * write leaves the old edges fully intact; a crash inside the
+    * (instant) park/publish window leaves `edges__compact_old` beside
+    * the complete staged copy, which the next heal — on entry to this,
+    * [[appendKnnGraph]] or [[compactKnnGraphStore]] — publishes.
+    * Member and seed files are untouched
     * (KnnGraphStoreSpec). After a rebuild the store equals a
     * from-scratch build over the accumulated corpus bit-for-bit —
     * knn1c gates on knn1's oracle VERBATIM on exactly this
@@ -830,20 +774,12 @@ object Similarity {
                       k: Int, nProbe: Int = 2): Unit = {
     requireKnnParams(spark, path, k, nProbe,
       collectCents(spark.read.parquet(s"$path/seeds")).size)
-    val p = new org.apache.hadoop.fs.Path(s"$path/edges")
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/edges__rebuild_tmp")
-    val old = new org.apache.hadoop.fs.Path(s"$path/edges__rebuild_old")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    freshKnnEdges(spark, path, k, nProbe)
-      .write.mode("overwrite").parquet(tmp.toString)
-    // park-then-publish instead of delete-then-rename: the old edges
-    // survive until the new dir is in place, and any leftover parked
-    // dir from a previous crashed swap is swept first
-    if (fs.exists(old)) fs.delete(old, true): Unit
-    if (fs.exists(p))
-      require(fs.rename(p, old), s"rebuildKnnEdges: park $p -> $old failed")
-    require(fs.rename(tmp, p), s"rebuildKnnEdges: publish $tmp -> $p failed")
-    fs.delete(old, true): Unit
+    graft.etl.BucketCompaction.heal(spark, path)
+    graft.etl.BucketCompaction.swap(spark,
+      new org.apache.hadoop.fs.Path(s"$path/edges")) { tmp =>
+      freshKnnEdges(spark, path, k, nProbe)
+        .write.mode("overwrite").parquet(tmp.toString)
+    }
   }
 
   /** STALENESS metric for the stored edges: the fraction of (sampled)

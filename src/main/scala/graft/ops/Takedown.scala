@@ -54,77 +54,54 @@ object Takedown {
   private def fsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Rewrite the named hit buckets of a `__kb=`-bucketed store,
-    * keeping only `keepOf`'s rows (the exact complement of `dropOf`'s,
-    * supplied separately so no all-column join is needed). Returns
-    * rows removed. ONE job writes every hit bucket's kept rows to a
-    * staged `__takedown_tmp` store (readers ignore it —
-    * underscore-prefixed, no `=`); the per-bucket swaps are
-    * driver-side renames in the exact crash windows
-    * [[graft.etl.BucketCompaction.heal]] owns; a bucket whose rows are
+  /** Rewrite the named hit dirs (`partCol` values) of a partitioned
+    * store, keeping only `keepOf`'s rows (the exact complement of
+    * `dropOf`'s, supplied separately so no all-column join is needed).
+    * Returns rows removed. ONE job writes every hit dir's kept rows to
+    * the staging root and each dir swaps in its copy
+    * ([[graft.etl.BucketCompaction.swapLeaves]], in the crash windows
+    * [[graft.etl.BucketCompaction.heal]] owns); a dir whose rows are
     * ALL dropped is deleted outright. */
-  private def rewriteWithout(spark: SparkSession, path: String,
-                             hitBuckets: Seq[Int],
-                             dropOf: DataFrame => DataFrame,
-                             keepOf: DataFrame => DataFrame): Long =
-    rewritePartitionsWithout(spark, path, "__kb",
-      hitBuckets.map(_.asInstanceOf[Any]), dropOf, keepOf)
-
-  /** The partition-generic core of [[rewriteWithout]]: also serves the
-    * `tb=`-partitioned BM25 postings and the `__sig=`-partitioned ANN
-    * index, whose takedowns rewrite THEIR partition scheme's hit dirs. */
   private def rewritePartitionsWithout(spark: SparkSession, path: String,
                                        partCol: String, hitVals: Seq[Any],
                                        dropOf: DataFrame => DataFrame,
                                        keepOf: DataFrame => DataFrame): Long = {
     if (hitVals.isEmpty) return 0L
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) return 0L
+    if (!fsOf(spark, p).exists(p)) return 0L
     graft.etl.BucketCompaction.heal(spark, path)
     if (!graft.etl.StoreMeta.hasData(spark, path)) return 0L
     val bucketRows = spark.read.parquet(path)
       .filter(col(partCol).isin(hitVals: _*)) // partition-pruned
     val removed = dropOf(bucketRows).count()
     if (removed == 0) return 0L
-    val tmpRoot = new org.apache.hadoop.fs.Path(p, "__takedown_tmp")
-    if (fs.exists(tmpRoot)) fs.delete(tmpRoot, true): Unit
-    keepOf(bucketRows).repartition(col(partCol))
-      .write.mode("overwrite").partitionBy(partCol).parquet(tmpRoot.toString)
-    hitVals.foreach { b =>
-      val staged = new org.apache.hadoop.fs.Path(tmpRoot, s"$partCol=$b")
-      val live = new org.apache.hadoop.fs.Path(p, s"$partCol=$b")
-      if (fs.exists(live)) {
-        if (fs.exists(staged)) {
-          val tmp = new org.apache.hadoop.fs.Path(p, s"$partCol=${b}__compact_tmp")
-          val old = new org.apache.hadoop.fs.Path(p, s"$partCol=${b}__compact_old")
-          require(fs.rename(staged, tmp),
-            s"Takedown: stage $staged -> $tmp failed")
-          require(fs.rename(live, old), s"Takedown: park $live -> $old failed")
-          require(fs.rename(tmp, live), s"Takedown: publish $tmp -> $live failed")
-          fs.delete(old, true): Unit
-        } else {
-          // every row of this bucket was dropped
-          fs.delete(live, true): Unit
-        }
-      }
-    }
-    fs.delete(tmpRoot, true): Unit
+    graft.etl.BucketCompaction.swapLeaves(spark, path, keepOf(bucketRows),
+      Seq(partCol), hitVals.map(v => s"$partCol=$v"))
     removed
   }
 
-  /** The pinned `kb` of a bucketed store, whatever family pinned it
-    * (the keyed logs' own `keyed_log`, or the signature/token/hood
-    * families that carry `kb` beside their layout parameters). */
-  private def pinnedKb(spark: SparkSession, path: String): Int = {
-    val m = graft.etl.StoreMeta.readParams(spark, path).getOrElse(
-      sys.error(s"Takedown: no _graft_meta sidecar at $path — " +
-        "takedown needs the bucketed (r16) layout; rebuild the store"))
-    require(m.contains("kb"),
-      s"Takedown: store at $path pins no 'kb' (pre-r16 flat layout) — " +
-        s"rebuild it bucketed to gain the takedown verb; sidecar: $m")
-    m("kb").toInt
+  /** Remove the rows whose `keyCol` is in `del` from a store whose
+    * partition a key alone cannot derive (BM25 term buckets, ANN
+    * signatures, kNN lists, SemDeDup cluster buckets): ONE
+    * column-pruned (key, partition) scan finds the hit dirs, and only
+    * those rewrite. Returns rows removed. */
+  private def deleteScanned(spark: SparkSession, path: String, partCol: String,
+                            keyCol: String, del: DataFrame): Long = {
+    graft.etl.BucketCompaction.heal(spark, path)
+    if (!graft.etl.StoreMeta.hasData(spark, path)) return 0L
+    val hit = spark.read.parquet(path)
+      .join(del, Seq(keyCol), "left_semi")
+      .select(col(partCol)).distinct()
+      .collect().map(_.get(0)).toSeq // ≤ the store's partition count
+    rewritePartitionsWithout(spark, path, partCol, hit,
+      _.join(del, Seq(keyCol), "left_semi"),
+      _.join(del, Seq(keyCol), "left_anti"))
   }
+
+  /** The pinned `kb` of a bucketed store ([[graft.etl.Sinks.pinnedKb]]):
+    * takedown probes by bucket, so a store without one fails fast. */
+  private def pinnedKb(spark: SparkSession, path: String): Int =
+    graft.etl.Sinks.pinnedKb(path, graft.etl.StoreMeta.readParams(spark, path))
 
   /** KEYED takedown: remove every row whose `keyCol` appears in `ids`
     * from a `__kb=`-bucketed keyed store (signature stores keyed
@@ -139,8 +116,8 @@ object Takedown {
     val keyed = ids.toDF(keyCol).localCheckpoint()
     val hit = keyed
       .select(graft.etl.Sinks.keyBucket(Seq(keyCol), kb).as("__kb"))
-      .distinct().collect().map(_.getInt(0)).toSeq // ≤ kb, driver-bounded
-    rewriteWithout(spark, path, hit,
+      .distinct().collect().map(_.get(0)).toSeq // ≤ kb, driver-bounded
+    rewritePartitionsWithout(spark, path, "__kb", hit,
       rows => rows.join(keyed, Seq(keyCol), "left_semi"),
       rows => rows.join(keyed, Seq(keyCol), "left_anti"))
   }
@@ -170,8 +147,8 @@ object Takedown {
         .join(one.select(col("__del").as(bCol)), Seq(bCol), "left_anti")
     val hit = dropOf(spark.read.parquet(path))
       .select(col("__kb")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    rewriteWithout(spark, path, hit, dropOf, keepOf)
+      .collect().map(_.get(0)).toSeq
+    rewritePartitionsWithout(spark, path, "__kb", hit, dropOf, keepOf)
   }
 
   /** BM25-INDEX takedown: remove a set of docs from a persisted
@@ -187,16 +164,7 @@ object Takedown {
   def deleteFromBm25Index(spark: SparkSession, path: String,
                           ids: DataFrame): Long = {
     val del = ids.toDF("doc_id").localCheckpoint()
-    val postings = s"$path/postings"
-    val n = if (graft.etl.StoreMeta.hasData(spark, postings)) {
-      val hit = spark.read.parquet(postings)
-        .join(del, Seq("doc_id"), "left_semi")
-        .select(col("tb")).distinct()
-        .collect().map(_.get(0)).toSeq // ≤ term-bucket modulus
-      rewritePartitionsWithout(spark, postings, "tb", hit,
-        rows => rows.join(del, Seq("doc_id"), "left_semi"),
-        rows => rows.join(del, Seq("doc_id"), "left_anti"))
-    } else 0L
+    val n = deleteScanned(spark, s"$path/postings", "tb", "doc_id", del)
     if (graft.etl.StoreMeta.hasData(spark, s"$path/docs"))
       deleteKeys(spark, s"$path/docs", "doc_id", del): Unit
     n
@@ -212,31 +180,8 @@ object Takedown {
     * removed. */
   def deleteFromAnnIndex(spark: SparkSession, path: String,
                          ids: DataFrame): Long = {
-    val del = ids.toDF("cand_id").localCheckpoint()
-    if (!graft.etl.StoreMeta.hasData(spark, path)) return 0L
-    val hit = spark.read.parquet(path)
-      .join(del, Seq("cand_id"), "left_semi")
-      .select(col("__sig")).distinct()
-      .collect().map(_.get(0)).toSeq
-    rewritePartitionsWithout(spark, path, "__sig", hit,
-      rows => rows.join(del, Seq("cand_id"), "left_semi"),
-      rows => rows.join(del, Seq("cand_id"), "left_anti"))
-  }
-
-  /** Staged swap of ONE flat dir to a filtered copy — the compaction
-    * protocol applied to a rewrite: write keep to `<dir>__compact_tmp`,
-    * park, publish, sweep; every crash window is one
-    * [[graft.etl.BucketCompaction.heal]] already owns. */
-  private def rewriteFlatWithout(spark: SparkSession, dir: String,
-                                 keep: DataFrame): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = fsOf(spark, p)
-    val tmp = new org.apache.hadoop.fs.Path(dir + "__compact_tmp")
-    val old = new org.apache.hadoop.fs.Path(dir + "__compact_old")
-    keep.write.mode("overwrite").parquet(tmp.toString)
-    require(fs.rename(p, old), s"Takedown: park $p -> $old failed")
-    require(fs.rename(tmp, p), s"Takedown: publish $tmp -> $p failed")
-    fs.delete(old, true): Unit
+    deleteScanned(spark, path, "__sig", "cand_id",
+      ids.toDF("cand_id").localCheckpoint())
   }
 
   /** K-NN GRAPH STORE takedown: remove the ids' member rows (their
@@ -266,13 +211,7 @@ object Takedown {
         "re-seeding is a rebuild (writeKnnGraphStore), not a takedown")
     // members: hit lists from a two-column scan, then pruned rewrite
     val members = s"$path/members"
-    val hitLists = spark.read.parquet(members)
-      .join(del, Seq("cand_id"), "left_semi")
-      .select(col("list_id")).distinct()
-      .collect().map(_.get(0)).toSeq
-    val removed = rewritePartitionsWithout(spark, members, "list_id", hitLists,
-      rows => rows.join(del, Seq("cand_id"), "left_semi"),
-      rows => rows.join(del, Seq("cand_id"), "left_anti"))
+    val removed = deleteScanned(spark, members, "list_id", "cand_id", del)
     // edges: anchors that lost a neighbor re-derive; rows naming a
     // deleted id on either side drop. The edge table is (n·k)-row
     // metadata — one staged swap rewrite.
@@ -300,10 +239,14 @@ object Takedown {
       if (nAffected > 0)
         Similarity.deltaKnnEdges(anchors, path, k, nProbe, "vec_id", "__cv")
       else edges.limit(0)
-    rewriteFlatWithout(spark, s"$path/edges",
-      kept.select(edges.columns.map(col): _*)
-        .unionByName(fresh.select(edges.columns.map(col): _*))
-        .localCheckpoint()) // materialize BEFORE the swap touches edges
+    val out = kept.select(edges.columns.map(col): _*)
+      .unionByName(fresh.select(edges.columns.map(col): _*))
+      .localCheckpoint() // materialize BEFORE the swap touches edges
+    graft.etl.BucketCompaction.heal(spark, path)
+    graft.etl.BucketCompaction.swap(spark,
+      new org.apache.hadoop.fs.Path(s"$path/edges")) { tmp =>
+      out.write.mode("overwrite").parquet(tmp.toString)
+    }
     (removed, nAffected)
   }
 
@@ -325,16 +268,7 @@ object Takedown {
                               survivorsPath: Option[String] = None): Long = {
     val asg = s"$storePath/assignments"
     val del = ids.toDF("__vid").localCheckpoint()
-    val removed =
-      if (graft.etl.StoreMeta.hasData(spark, asg)) {
-        val hit = spark.read.parquet(asg)
-          .join(del, Seq("__vid"), "left_semi")
-          .select(col("__cb")).distinct()
-          .collect().map(_.get(0)).toSeq
-        rewritePartitionsWithout(spark, asg, "__cb", hit,
-          rows => rows.join(del, Seq("__vid"), "left_semi"),
-          rows => rows.join(del, Seq("__vid"), "left_anti"))
-      } else 0L
+    val removed = deleteScanned(spark, asg, "__cb", "__vid", del)
     survivorsPath.filter(p => graft.etl.StoreMeta.hasData(spark, p))
       .foreach { p =>
         val key = graft.etl.StoreMeta.readParams(spark, p)

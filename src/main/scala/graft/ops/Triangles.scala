@@ -386,37 +386,15 @@ object Triangles {
     // BATCHED (r16, the compactStore discipline at two levels): ONE
     // job folds every needing leaf — o is 0/1, so `eb*2 + o` encodes
     // the (eb, o) pair for an exact partition-pruned filter; the
-    // repartition clusters one output task per leaf, the staged store
-    // lands 1 file per leaf, and the per-leaf park→publish→sweep
-    // renames are driver-side metadata ops in the exact crash windows
-    // [[healEdgeStore]] already owns.
+    // staged store lands 1 file per leaf, and the per-leaf swaps are
+    // driver-side renames in the exact crash windows [[healEdgeStore]]
+    // already owns.
     import org.apache.spark.sql.functions.{col, lit}
     val enc = need.map { case (eb, o) =>
       eb.stripPrefix("eb=").toLong * 2 + o.stripPrefix("o=").toLong }
-    val tmpRoot = new org.apache.hadoop.fs.Path(p, "__batchfold_tmp")
-    if (fs.exists(tmpRoot)) fs.delete(tmpRoot, true): Unit
-    spark.read.parquet(path)
-      .filter((col("eb") * lit(2L) + col("o")).isin(enc: _*))
-      .repartition(col("eb"), col("o"))
-      .write.mode("overwrite").partitionBy("eb", "o")
-      .parquet(tmpRoot.toString)
-    need.foreach { case (eb, o) =>
-      val staged = new org.apache.hadoop.fs.Path(tmpRoot, s"$eb/$o")
-      if (fs.exists(staged)) {
-        val ebP = new org.apache.hadoop.fs.Path(p, eb)
-        val live = new org.apache.hadoop.fs.Path(ebP, o)
-        val tmp = new org.apache.hadoop.fs.Path(ebP, s"${o}__compact_tmp")
-        val old = new org.apache.hadoop.fs.Path(ebP, s"${o}__compact_old")
-        require(fs.rename(staged, tmp),
-          s"compactEdgeStore: stage $staged -> $tmp failed")
-        require(fs.rename(live, old),
-          s"compactEdgeStore: park $live -> $old failed")
-        require(fs.rename(tmp, live),
-          s"compactEdgeStore: publish $tmp -> $live failed")
-        fs.delete(old, true): Unit
-      }
-    }
-    fs.delete(tmpRoot, true): Unit
+    graft.etl.BucketCompaction.swapLeaves(spark, path,
+      spark.read.parquet(path).filter((col("eb") * lit(2L) + col("o")).isin(enc: _*)),
+      Seq("eb", "o"), need.map { case (eb, o) => s"$eb/$o" })
     need.map { case (eb, o) => s"$eb/$o" }
   }
 

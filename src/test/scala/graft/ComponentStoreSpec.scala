@@ -162,8 +162,8 @@ class ComponentStoreSpec extends SparkSpec {
     assert(labelSet(p) === before, "migration must not change any label")
     // dirs follow the new modulus; no parked/staged trees remain
     val parent = new java.io.File(p).getParentFile
-    assert(!new java.io.File(parent, "labels__rebucket_tmp").exists())
-    assert(!new java.io.File(parent, "labels__rebucket_old").exists())
+    assert(!new java.io.File(parent, "labels__compact_tmp").exists())
+    assert(!new java.io.File(parent, "labels__compact_old").exists())
     val dirs = new java.io.File(p).listFiles().filter(_.isDirectory)
       .map(_.getName).filter(_.startsWith("cb=")).toSet
     assert(dirs.forall(_.stripPrefix("cb=").toLong < 3))

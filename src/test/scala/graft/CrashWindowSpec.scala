@@ -16,13 +16,32 @@ import graft.streaming.EventStreams
   *     silently reopening every interval and pruning the surviving
   *     history.
   */
+/** Local filesystem that dies right after the first PARK rename (a
+  * rename onto a `*_old` name) while armed: the real staged-swap code
+  * runs up to its crash window, whatever names it parks under. */
+object CrashAfterPark {
+  @volatile var armed = false
+}
+
+class CrashAfterParkFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def rename(src: org.apache.hadoop.fs.Path,
+                      dst: org.apache.hadoop.fs.Path): Boolean = {
+    val ok = super.rename(src, dst)
+    if (ok && CrashAfterPark.armed && dst.getName.endsWith("_old")) {
+      CrashAfterPark.armed = false
+      throw new IllegalStateException(s"simulated crash after parking $src")
+    }
+    ok
+  }
+}
+
 class CrashWindowSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  /** Simulate a compactFlatStore crash BETWEEN park and publish: the
+  /** Simulate a whole-store swap crash BETWEEN park and publish: the
     * staged tmp is complete, the live dir is parked, nothing lives at
     * the store path. */
   private def crashMidSwap(store: String): Unit = {
@@ -75,6 +94,99 @@ class CrashWindowSpec extends SparkSpec {
     val leftovers = fs.listStatus(new org.apache.hadoop.fs.Path(root))
       .map(_.getPath.getName).filter(_.contains("__compact_"))
     assert(leftovers.isEmpty, s"leftovers: ${leftovers.mkString(", ")}")
+  }
+
+  /** Run `op` with the filesystem crashing right after its first park. */
+  private def crashAfterPark(op: => Unit): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.file.impl", classOf[CrashAfterParkFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    CrashAfterPark.armed = true
+    try {
+      val e = intercept[Exception](op)
+      assert(e.getMessage.contains("simulated crash"), e.getMessage)
+    } finally {
+      CrashAfterPark.armed = false
+      conf.unset("fs.file.impl")
+      conf.unset("fs.file.impl.disable.cache")
+    }
+  }
+
+  private def swapLeftovers(root: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+    try s.iterator().asScala.map(_.getFileName.toString)
+      .filter(n => n.matches(".*__(compact|rebuild|rebucket)_.*")).toList
+    finally s.close()
+  }
+
+  test("every staged-swap caller lands on the pre- or post-state after a park/publish crash") {
+    import graft.ops.{Dedup, Similarity, Takedown, Triangles}
+    import graft.etl.{BucketCompaction, Sinks}
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    val ids = (0L until 40L).map(i => (i, s"v$i"))
+    val edges = for (a <- 0L until 12L; b <- (a + 1) until 12L
+                     if (a * 7 + b) % 3 == 0) yield (a, b)
+    val emb = Tables.embeddings(spark, sfDir)
+    // (name, build the store under root, operation, next call, rows)
+    val cases: Seq[(String, String => Unit, String => Unit, String => Unit,
+                    String => Seq[String])] = Seq(
+      ("compactStore",
+        r => Seq(ids.take(20), ids.drop(20)).foreach(b => Sinks
+          .idempotentAppendBucketed(b.toDF("id", "v"), s"$r/log", Seq("id"), 4)),
+        r => BucketCompaction.compactStore(spark, s"$r/log", "__kb"): Unit,
+        r => BucketCompaction.compactStore(spark, s"$r/log", "__kb"): Unit,
+        r => sorted(spark.read.parquet(s"$r/log").select("id", "v"))),
+      ("compactEdgeStore",
+        { r =>
+          val (d, seed) = edges.partition { case (a, b) => (a + b) % 2 == 0 }
+          Triangles.writeEdgeStore(seed.toDF("u", "v"), "u", "v", s"$r/e", nBuckets = 2)
+          Triangles.appendEdgeStore(Triangles.normalize(d.toDF("u", "v")), s"$r/e")
+        },
+        r => Triangles.compactEdgeStore(spark, s"$r/e"): Unit,
+        r => Triangles.compactEdgeStore(spark, s"$r/e"): Unit,
+        r => sorted(spark.read.parquet(s"$r/e").select("a", "b", "o"))),
+      ("Takedown.deleteKeys",
+        r => Sinks.idempotentAppendBucketed(
+          ids.toDF("__id", "v"), s"$r/log", Seq("__id"), 4): Unit,
+        r => Takedown.deleteKeys(spark, s"$r/log", "__id",
+          Seq(1L, 2L, 3L, 5L, 8L, 13L).toDF("__id")): Unit,
+        r => Takedown.deleteKeys(spark, s"$r/log", "__id",
+          Seq(1L, 2L, 3L, 5L, 8L, 13L).toDF("__id")): Unit,
+        r => sorted(spark.read.parquet(s"$r/log").select("__id", "v"))),
+      ("rebuildKnnEdges",
+        { r =>
+          Similarity.writeKnnGraphStore(emb.filter(col("vec_id") % 10 =!= 3),
+            s"$r/knn", graft.analytics.VectorQueries.IvfSeedIds, k = 5, nProbe = 3)
+          Similarity.appendKnnGraph(emb.filter(col("vec_id") % 10 === 3),
+            s"$r/knn", k = 5, nProbe = 3)
+        },
+        r => Similarity.rebuildKnnEdges(spark, s"$r/knn", k = 5, nProbe = 3),
+        r => Similarity.compactKnnGraphStore(spark, s"$r/knn"): Unit,
+        r => sorted(spark.read.parquet(s"$r/knn/edges").select("vec_id", "nbr_id"))),
+      ("rebucketComponentStore",
+        r => Dedup.writeComponentStore(
+          Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b"),
+          s"$r/labels", nBuckets = 4),
+        r => Dedup.rebucketComponentStore(spark, s"$r/labels", 3),
+        r => Dedup.rebucketComponentStore(spark, s"$r/labels", 3),
+        r => sorted(Dedup.readComponentStore(spark, s"$r/labels")
+          .select("node", "component"))))
+    cases.foreach { case (name, build, op, next, rows) =>
+      val clean = tmp(s"cw-swap-clean")
+      build(clean); op(clean)
+      val crashed = tmp(s"cw-swap-crash")
+      build(crashed)
+      val pre = rows(crashed)
+      crashAfterPark(op(crashed))
+      next(crashed)
+      val got = rows(crashed)
+      assert(got == pre || got == rows(clean),
+        s"$name: ${got.size} rows, pre ${pre.size}, post ${rows(clean).size}")
+      assert(swapLeftovers(crashed).isEmpty,
+        s"$name leftovers: ${swapLeftovers(crashed).mkString(", ")}")
+    }
   }
 
   test("requireFamily treats a zero-row unpinned dir as day zero (data-then-pin crash)") {

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.etl.Sinks
+import graft.etl.{BucketCompaction, Sinks}
 
 class SinksSpec extends SparkSpec {
   import spark.implicits._
@@ -33,7 +33,10 @@ class SinksSpec extends SparkSpec {
         .coalesce(1).write.mode("append").parquet(dir)
     }
     val before = spark.read.parquet(dir).as[Long].collect().sorted.toSeq
-    val (nBefore, nAfter) = Sinks.compact(spark, dir, targetBytes = 1L << 20)
+    val parent = new java.io.File(dir).getParent
+    val nBefore = BucketCompaction.dataFileCount(spark, dir)
+    assert(BucketCompaction.compactDirs(spark, parent, Seq("t")) == Seq("t"))
+    val nAfter = BucketCompaction.dataFileCount(spark, dir)
     val after = spark.read.parquet(dir).as[Long].collect().sorted.toSeq
     assert(nBefore == 20 && nAfter == 1, s"$nBefore -> $nAfter")
     assert(after == before)
